@@ -266,10 +266,12 @@ object SparkEntry {
       math.max(5L, table(s, dir, "documents").count() / 100L).toInt)
 
   /** Committed CSV fixtures (reference-data samples + crafted corrupt
-    * rows) exercising the ingest module; absolute path because `queries`
-    * receives only the testdata dir.
+    * rows) exercising the ingest module: the checkout's `fixtures/`,
+    * resolved against the working directory (run from the repository
+    * root; sbt forks tests and `run` there). Absolute because `queries`
+    * receives only the testdata dir and the oracle SQL embeds the path.
     */
-  val FixturesDir = "/root/repo/fixtures"
+  val FixturesDir: String = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
 
   /** Fixed run timestamp for the serve-stage entries (the reference uses
     * `datetime.now().isoformat()` per load run; pinned for reproducible

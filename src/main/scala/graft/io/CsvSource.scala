@@ -58,9 +58,24 @@ object CsvSource {
     * carries nulls is NOT corrupt (the validator's `na.drop` handles it).
     */
   def readSplit(spark: SparkSession, schema: StructType, paths: Seq[String]): (DataFrame, DataFrame) = {
-    val raw = readPermissive(spark, schema, paths).cache()
-    val corrupt = raw.filter(col(CorruptCol).isNotNull)
-    val clean   = raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
+    val (_, clean, corrupt) = readSplitCached(spark, schema, paths)
     (clean, corrupt)
   }
+
+  /** [[readSplit]] that also returns the cached parse, so a caller that
+    * knows when both sides are consumed can `unpersist` it.
+    */
+  def readSplitCached(spark: SparkSession, schema: StructType,
+                      paths: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+    val raw = readPermissive(spark, schema, paths).cache()
+    (raw, cleanRows(raw), raw.filter(col(CorruptCol).isNotNull))
+  }
+
+  /** The rows of a [[readPermissive]] frame that parsed, without the
+    * corrupt-record column. On an uncached frame this is safe to write or
+    * join but not to `count()`: the count prunes the scan to the
+    * corrupt-record column alone, which Spark refuses.
+    */
+  def cleanRows(raw: DataFrame): DataFrame =
+    raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
 }

@@ -1,6 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
+
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.io.{FsUtil, ParquetIO}
 import graft.kpi.KpiQueries
@@ -15,11 +20,17 @@ import graft.validate.Validator
   * Differences from the reference, by design (SURVEY §4.3):
   *   - the enriched frame is persisted once and fans out to all five
   *     KPI queries (the reference recomputes the 3-table join per sink);
+  *   - independent branches run at once: stream ingest + staging and the
+  *     two dimension loads, then, over the persisted enrichment, one chain
+  *     per KPI (write, probe, item projection, sink). At this size the
+  *     time goes to serial per-job fixed costs, not data volume, so
+  *     overlapping the branches is what shortens the run;
   *   - serving items are columnar projections written by executors
   *     (reference: `collect()` + driver loops);
   *   - dimension reprocessing is gated by the MD5 CDC check (S11) with
   *     a staged-parquet fast path (S4) — an unchanged songs/users CSV
-  *     is never re-parsed;
+  *     is never re-parsed — and a changed one is written to staging
+  *     straight from its parse, with no cached copy;
   *   - output verification uses `take(1)` existence probes (O4) instead
   *     of S3 polling.
   */
@@ -44,6 +55,45 @@ object PipelineJob {
   /** O4 — `take(1)` existence probe on a written output. */
   def outputNonEmpty(df: DataFrame): Boolean = df.take(1).nonEmpty
 
+  /** Name of the threads that run a job's concurrent branches. */
+  private[pipeline] val BranchThreadName = "graft-pipeline-branch"
+
+  /** Each KPI's serving projection, in the order its chain is submitted:
+    * longest first (trending's windowed aggregate), so the phase is not
+    * left waiting on a chain that started last.
+    */
+  private val KpiChains: Seq[(String, (DataFrame, String) => DataFrame)] = Seq(
+    "trending_kpis"           -> KpiItems.trendingItems,
+    "genre_top_songs_kpi"     -> KpiItems.topSongsItems,
+    "genre_top_genres_kpi"    -> KpiItems.topGenresItems,
+    "user_kpis"               -> KpiItems.userItems,
+    "genre_daily_metrics_kpi" -> KpiItems.genreDailyItems)
+
+  private def rowCount: Column = count(lit(1)).as("rows")
+
+  /** Run independent branches at once and return their results in order.
+    * The pool is this call's own, one thread per branch. Its threads are
+    * created from the calling thread, so they inherit the caller's Spark
+    * local properties (job group, scheduler pool). Every branch is waited
+    * for; then the first failed branch's own exception is rethrown.
+    */
+  private def inParallel[T](branches: Seq[() => T]): Seq[T] = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(branches.size, (r: Runnable) => {
+      val t = new Thread(r, BranchThreadName)
+      threads.add(t)
+      t
+    })
+    try {
+      val futures = branches.map(b => pool.submit(new Callable[T] { def call(): T = b() }))
+      futures.foreach(f => Try(f.get()))
+      futures.map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+  }
+
   /** Dimension load with CDC gate: reprocess the CSV only when its
     * content hash changed (or nothing is staged yet); otherwise read the
     * staged parquet (`scripts/validate_data.py:193-202` +
@@ -53,8 +103,7 @@ object PipelineJob {
                       ledger: String): DataFrame = {
     val changed = FsUtil.checksumChanged(spark, csv, ledger)
     if (changed || !FsUtil.exists(spark, staged)) {
-      val fresh = Validator.processReferenceData(spark, csv)
-      ParquetIO.writeOverwrite(fresh, staged)
+      Validator.stageReferenceData(spark, csv, staged)
       // ledger advances only after the staged write succeeded — a crash
       // mid-write must leave `changed=true` for the next run
       FsUtil.commitChecksum(spark, csv, ledger)
@@ -62,65 +111,71 @@ object PipelineJob {
     ParquetIO.read(spark, staged)
   }
 
+  /** Validation job: permissive CSV → quarantine → clean → union, appended
+    * to the staged history (S6), which is returned. Row counts ride the
+    * write action via `observe()` — no second pass over the inputs just
+    * for logging (SURVEY §4.3: the reference re-runs count() eagerly at
+    * 8+ sites). The per-file parse caches are released once the append
+    * and the quarantine writes are done.
+    */
+  private def stageStreams(spark: SparkSession, cfg: Config, obs: Observation): DataFrame = {
+    val (ingested, parses) =
+      Validator.ingestStreams(spark, cfg.streamFiles, cfg.quarantineDir, cfg.bulkIngest)
+    try ParquetIO.writeAppend(ingested.observe(obs, rowCount), s"${cfg.stagingDir}/streams")
+    finally parses.foreach(_.unpersist())
+    ParquetIO.read(spark, s"${cfg.stagingDir}/streams")
+  }
+
+  /** One KPI's chain: write, `take(1)` probe, re-read, item projection and
+    * serve. Returns the KPI's rows and the items served.
+    */
+  private def kpiChain(spark: SparkSession, cfg: Config, sink: Option[KpiSink.KvStore],
+                       name: String, kpi: DataFrame,
+                       items: (DataFrame, String) => DataFrame): (Long, Long) = {
+    val path = s"${cfg.outputDir}/$name"
+    // row count rides the write action (A5); the only post-write read
+    // is the O4 take(1) existence probe
+    val written = new Observation(s"kpi_$name")
+    ParquetIO.writeOverwrite(kpi.observe(written, rowCount), path)
+    val out = ParquetIO.read(spark, path)
+    require(outputNonEmpty(out), s"KPI output $name is empty")
+    val served = sink match {
+      case Some(store) =>
+        // served count rides the sink's foreachPartition action — no
+        // second recompute of the item frame just for the tally
+        val o = new Observation(s"served_$name")
+        KpiSink.write(items(out, cfg.runTs).observe(o, rowCount), store)
+        o.get("rows").asInstanceOf[Long]
+      case None => items(out, cfg.runTs).count()
+    }
+    (written.get("rows").asInstanceOf[Long], served)
+  }
+
   def run(spark: SparkSession, cfg: Config,
           sink: Option[KpiSink.KvStore] = None): Result = {
-    // 1 — validation job: permissive CSV → quarantine → clean → union.
-    // Row counts ride the write action via observe() — no second pass
-    // over the inputs just for logging (SURVEY §4.3: the reference
-    // re-runs count() eagerly at 8+ sites).
-    val obs = new org.apache.spark.sql.Observation("staged_streams")
-    val ingested =
-      if (cfg.bulkIngest) Validator.processStreamsBulk(spark, cfg.streamFiles, cfg.quarantineDir)
-      else Validator.processStreams(spark, cfg.streamFiles, cfg.quarantineDir)
-    val streams = ingested
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-    ParquetIO.writeAppend(streams, s"${cfg.stagingDir}/streams") // S6: history accumulates
+    // 1 — validation job and both dimension loads, at once
+    val obs = new Observation("staged_streams")
+    val Seq(stagedRaw, songs, users) = inParallel(Seq(
+      () => stageStreams(spark, cfg, obs),
+      () => loadDim(spark, cfg.songsCsv, s"${cfg.stagingDir}/songs",
+        s"${cfg.stagingDir}/ledger/songs.md5"),
+      () => loadDim(spark, cfg.usersCsv, s"${cfg.stagingDir}/users",
+        s"${cfg.stagingDir}/ledger/users.md5")))
     val stagedRows = obs.get("rows").asInstanceOf[Long]
-    val songs = loadDim(spark, cfg.songsCsv, s"${cfg.stagingDir}/songs",
-      s"${cfg.stagingDir}/ledger/songs.md5")
-    val users = loadDim(spark, cfg.usersCsv, s"${cfg.stagingDir}/users",
-      s"${cfg.stagingDir}/ledger/users.md5")
 
-    // 2 — KPI job over the FULL staged history (reference semantics);
+    // 2+3 — KPI and serve over the FULL staged history (reference
+    // semantics), one chain per KPI, all over one persisted enrichment;
     // dedupStagedStreams makes double-staged files harmless (SURVEY §7.4.6)
-    val stagedRaw = ParquetIO.read(spark, s"${cfg.stagingDir}/streams")
     val staged =
       if (cfg.dedupStagedStreams) Validator.dedupStreams(stagedRaw) else stagedRaw
     val enriched = KpiQueries.persistEnriched(
       KpiQueries.prepareStreamingData(staged, songs, users))
-    val kpis = KpiQueries.all(enriched, cfg.approxDistinct, cfg.deskewTrending)
-    val kpiRows = kpis.map { case (name, df) =>
-      // row count rides the write action (A5); the only post-write read
-      // is the O4 take(1) existence probe
-      val o = new org.apache.spark.sql.Observation(s"kpi_$name")
-      ParquetIO.writeOverwrite(df.observe(o, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows")), s"${cfg.outputDir}/$name")
-      val out = ParquetIO.read(spark, s"${cfg.outputDir}/$name")
-      require(outputNonEmpty(out), s"KPI output $name is empty")
-      name -> o.get("rows").asInstanceOf[Long]
-    }
-
-    // 3 — serve job: columnar items, distributed batched sink
-    val items = Seq(
-      KpiItems.userItems(ParquetIO.read(spark, s"${cfg.outputDir}/user_kpis"), cfg.runTs),
-      KpiItems.genreDailyItems(ParquetIO.read(spark, s"${cfg.outputDir}/genre_daily_metrics_kpi"), cfg.runTs),
-      KpiItems.topSongsItems(ParquetIO.read(spark, s"${cfg.outputDir}/genre_top_songs_kpi"), cfg.runTs),
-      KpiItems.topGenresItems(ParquetIO.read(spark, s"${cfg.outputDir}/genre_top_genres_kpi"), cfg.runTs),
-      KpiItems.trendingItems(ParquetIO.read(spark, s"${cfg.outputDir}/trending_kpis"), cfg.runTs))
-    val served = sink match {
-      case Some(store) => items.zipWithIndex.map { case (df, i) =>
-        // served count rides the sink's foreachPartition action — no
-        // second recompute of the item frame just for the tally
-        val o = new org.apache.spark.sql.Observation(s"served_$i")
-        KpiSink.write(df.observe(o, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows")), store)
-        o.get("rows").asInstanceOf[Long]
-      }.sum
-      case None => items.map(_.count()).sum
-    }
-
-    enriched.unpersist()
-    Result(stagedRows, kpiRows, served)
+    try {
+      val kpis = KpiQueries.all(enriched, cfg.approxDistinct, cfg.deskewTrending)
+      val counts = inParallel(KpiChains.map { case (name, items) =>
+        () => kpiChain(spark, cfg, sink, name, kpis(name), items)
+      })
+      Result(stagedRows, KpiChains.map(_._1).zip(counts.map(_._1)).toMap, counts.map(_._2).sum)
+    } finally enriched.unpersist()
   }
 }

@@ -93,17 +93,8 @@ object Validator {
     * `paths` elements may be comma-separated lists.
     */
   def processStreams(spark: SparkSession, paths: Seq[String],
-                     quarantinePath: Option[String] = None): DataFrame = {
-    val files = paths.flatMap(PathUtil.splitPaths)
-    require(files.nonEmpty, "no stream files given")
-    val cleaned = files.map { f =>
-      val (clean, corrupt) = CsvSource.readSplit(spark, Schemas.streams, Seq(f))
-      quarantinePath.foreach(q => ParquetIO.quarantineJson(corrupt, q))
-      validateColumns(clean, Schemas.requiredStreamsColumns, s"streams file: $f")
-      cleanStreams(clean)
-    }
-    cleaned.reduce(_ unionAll _)
-  }
+                     quarantinePath: Option[String] = None): DataFrame =
+    ingestStreams(spark, paths, quarantinePath, bulk = false)._1
 
   /** Scale path for [[processStreams]]: ONE permissive scan over the
     * whole file list instead of a per-file driver loop — at 10^4+ input
@@ -114,16 +105,31 @@ object Validator {
     * reference-parity quarantine granularity.
     */
   def processStreamsBulk(spark: SparkSession, paths: Seq[String],
-                         quarantinePath: Option[String] = None): DataFrame = {
+                         quarantinePath: Option[String] = None): DataFrame =
+    ingestStreams(spark, paths, quarantinePath, bulk = true)._1
+
+  /** [[processStreams]] (or, with `bulk`, [[processStreamsBulk]]) that
+    * also returns the cached parses behind its result. The quarantine
+    * writes have run when it returns; once the result is consumed too,
+    * the caller should `unpersist` the parses, which a long-lived session
+    * would otherwise keep, one per file per call.
+    */
+  def ingestStreams(spark: SparkSession, paths: Seq[String],
+                    quarantinePath: Option[String],
+                    bulk: Boolean): (DataFrame, Seq[DataFrame]) = {
     val files = paths.flatMap(PathUtil.splitPaths)
     require(files.nonEmpty, "no stream files given")
-    val (clean, corrupt) = CsvSource.readSplit(spark, Schemas.streams, files)
-    quarantinePath.foreach { q =>
-      ParquetIO.quarantineJson(
-        corrupt.withColumn("_source_file", input_file_name()), q)
+    val parsed = (if (bulk) Seq(files) else files.map(Seq(_))).map { batch =>
+      val (raw, clean, corrupt) = CsvSource.readSplitCached(spark, Schemas.streams, batch)
+      quarantinePath.foreach { q =>
+        ParquetIO.quarantineJson(
+          if (bulk) corrupt.withColumn("_source_file", input_file_name()) else corrupt, q)
+      }
+      validateColumns(clean, Schemas.requiredStreamsColumns,
+        if (bulk) s"streams files: ${batch.size}" else s"streams file: ${batch.head}")
+      (cleanStreams(clean), raw)
     }
-    validateColumns(clean, Schemas.requiredStreamsColumns, s"streams files: ${files.size}")
-    cleanStreams(clean)
+    (parsed.map(_._1).reduce(_ unionAll _), parsed.map(_._2))
   }
 
   /** Idempotency guard for the append-mode staging boundary (SURVEY
@@ -141,10 +147,25 @@ object Validator {
     * (`scripts/validate_data.py:219-249`): a frame containing `track_id`
     * is songs, else one containing `user_id` is users. Schemas are
     * declared (SURVEY §1.3); pass `inferSchema=true` for the reference's
-    * inference-compatibility mode.
+    * inference-compatibility mode. The declared-schema result is served
+    * from a cached parse, so it may be counted and reused.
     */
   def processReferenceData(spark: SparkSession, path: String,
-                           inferSchema: Boolean = false): DataFrame = {
+                           inferSchema: Boolean = false): DataFrame =
+    referenceData(spark, path, inferSchema, cached = true)
+
+  /** Stage a reference CSV: the same header check and dispatch as
+    * [[processReferenceData]], written as parquet (overwrite) to
+    * `stagedPath` straight from the permissive parse. Nothing is cached:
+    * the write is the parse's only consumer, and the pipeline reads the
+    * staged parquet back.
+    */
+  def stageReferenceData(spark: SparkSession, path: String, stagedPath: String): Unit =
+    ParquetIO.writeOverwrite(referenceData(spark, path, inferSchema = false, cached = false),
+      stagedPath)
+
+  private def referenceData(spark: SparkSession, path: String, inferSchema: Boolean,
+                            cached: Boolean): DataFrame = {
     val raw =
       if (inferSchema) CsvSource.readInferred(spark, Seq(path))
       else {
@@ -159,7 +180,8 @@ object Validator {
           if (header.contains("track_id")) (Schemas.songs, Schemas.requiredSongsColumns, "songs")
           else (Schemas.users, Schemas.requiredUsersColumns, "users")
         validateColumnSet(header, required, ctx)
-        CsvSource.readSplit(spark, schema, Seq(path))._1
+        if (cached) CsvSource.readSplit(spark, schema, Seq(path))._1
+        else CsvSource.cleanRows(CsvSource.readPermissive(spark, schema, Seq(path)))
       }
     if (raw.columns.contains("track_id")) {
       validateColumns(raw, Schemas.requiredSongsColumns, "songs")

@@ -10,7 +10,7 @@ class JsonlSourceSpec extends SparkSpec {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("score", DoubleType)))
 
-  private def fixture = Seq("/root/repo/fixtures/docs.jsonl")
+  private def fixture = Seq(s"${graft.SparkEntry.FixturesDir}/docs.jsonl")
 
   test("readSplit: malformed lines and type errors quarantine, clean side drops the marker") {
     val (clean, corrupt) = JsonlSource.readSplit(spark, schema, fixture)

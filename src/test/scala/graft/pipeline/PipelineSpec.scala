@@ -2,12 +2,34 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftSparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.storage.RDDBlockId
+
 import graft.SparkSpec
-import graft.serve.KpiSink
+import graft.io.ParquetIO
+import graft.kpi.KpiQueries
+import graft.serve.{KpiItems, KpiSink}
+
+object PipelineSpec {
+  /** A store that fails every batch carrying one `kpi_type`, with an
+    * error the sink does not retry.
+    */
+  final class FailingStore(kpiType: String) extends KpiSink.KvStore {
+    def putBatch(items: Seq[KpiSink.Item]): Unit =
+      if (items.exists(_.get("kpi_type").contains(kpiType)))
+        throw new RuntimeException(s"store rejects $kpiType")
+  }
+}
 
 class PipelineSpec extends SparkSpec {
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.SparkEntry.FixturesDir
 
   test("end-to-end: validate -> stage -> KPIs -> serve, with CDC fast path") {
     val base = tmpDir("pipe")
@@ -76,5 +98,119 @@ class PipelineSpec extends SparkSpec {
     val a = spark.read.parquet(s"$base/a/trending_kpis").collect().map(_.toSeq).toSet
     val b = spark.read.parquet(s"$base/b/trending_kpis").collect().map(_.toSeq).toSet
     b shouldBe a
+  }
+
+  private def fixtureConfig(base: String, bulk: Boolean = false) = PipelineJob.Config(
+    streamFiles = Seq(s"$fixtures/streams_a.csv", s"$fixtures/streams_b.csv"),
+    songsCsv = s"$fixtures/songs.csv",
+    usersCsv = s"$fixtures/users.csv",
+    stagingDir = s"$base/staging",
+    outputDir = s"$base/out",
+    quarantineDir = Some(s"$base/quarantine"),
+    runTs = "2024-07-01T00:00:00",
+    bulkIngest = bulk)
+
+  private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def branchThreadsAlive: Boolean =
+    Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName == PipelineJob.BranchThreadName && t.isAlive)
+
+  private def rows(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  test("a failing serve write is rethrown once every branch is done, leaving nothing behind") {
+    val before = persistedRdds
+    val e = intercept[Exception] {
+      PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_fail")),
+        Some(new PipelineSpec.FailingStore("genre_top")))
+    }
+    e shouldNot be(a[java.util.concurrent.ExecutionException])
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("store rejects genre_top")) shouldBe true
+    (persistedRdds -- before) shouldBe empty
+    branchThreadsAlive shouldBe false
+  }
+
+  test("a run releases every cache it made: stream parses and the enrichment") {
+    spark.catalog.clearCache()
+    for (bulk <- Seq(false, true)) {
+      val before = persistedRdds
+      PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cache"), bulk),
+        Some(new KpiSink.InMemoryKvStore()))
+      withClue(s"bulkIngest=$bulk: ") {
+        spark.sharedState.cacheManager.isEmpty shouldBe true
+        (persistedRdds -- before) shouldBe empty
+      }
+    }
+    branchThreadsAlive shouldBe false
+  }
+
+  test("concurrent run equals the KPI queries and item projections run one at a time") {
+    val base = tmpDir("pipe_eq")
+    val cfg = fixtureConfig(base)
+    val store = new KpiSink.InMemoryKvStore()
+
+    // every job of the run carries the caller's job group, and the
+    // persisted enrichment's blocks are each filled once
+    val sc = spark.sparkContext
+    val jobGroups = mutable.ArrayBuffer.empty[String]
+    val enrichedRdds = mutable.Map.empty[Int, Int] // rdd id -> partitions
+    val puts = mutable.ArrayBuffer.empty[RDDBlockId]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobGroups.synchronized {
+        jobGroups += Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = enrichedRdds.synchronized {
+        e.stageInfo.rddInfos.filter(r => r.storageLevel.isValid && r.name.contains("BroadcastHashJoin"))
+          .foreach(r => enrichedRdds(r.id) = r.numPartitions)
+      }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = puts.synchronized {
+        (e.blockUpdatedInfo.blockId, e.blockUpdatedInfo.storageLevel.isValid) match {
+          case (b: RDDBlockId, true) => puts += b
+          case _ =>
+        }
+      }
+    }
+    GraftSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("pipeline-spec", "concurrent run")
+    val r = try PipelineJob.run(spark, cfg, Some(store)) finally {
+      sc.clearJobGroup()
+      GraftSparkInternals.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobGroups should not be empty
+    jobGroups.toSet shouldBe Set("pipeline-spec")
+    enrichedRdds.size shouldBe 1
+    val (enrichedId, partitions) = enrichedRdds.head
+    val fills = puts.filter(_.rddId == enrichedId)
+    fills.size shouldBe partitions
+    fills.distinct.size shouldBe partitions
+
+    // sequential reference over the same staged inputs
+    val staged = KpiQueries.prepareStreamingData(
+      ParquetIO.read(spark, s"${cfg.stagingDir}/streams"),
+      ParquetIO.read(spark, s"${cfg.stagingDir}/songs"),
+      ParquetIO.read(spark, s"${cfg.stagingDir}/users"))
+    val reference = KpiQueries.all(staged)
+    r.kpiRows.keySet shouldBe reference.keySet
+    for ((name, df) <- reference.toSeq.sortBy(_._1)) withClue(s"$name: ") {
+      val want = rows(df)
+      rows(spark.read.parquet(s"${cfg.outputDir}/$name")) shouldBe want
+      r.kpiRows(name) shouldBe want.values.sum
+    }
+    val projections = Seq[(String, (DataFrame, String) => DataFrame)](
+      "user_kpis" -> KpiItems.userItems,
+      "genre_daily_metrics_kpi" -> KpiItems.genreDailyItems,
+      "genre_top_songs_kpi" -> KpiItems.topSongsItems,
+      "genre_top_genres_kpi" -> KpiItems.topGenresItems,
+      "trending_kpis" -> KpiItems.trendingItems)
+    val items = projections.flatMap { case (name, project) =>
+      project(reference(name), cfg.runTs).collect().map(KpiSink.toItem).toSeq
+    }
+    store.scanAll().toSet shouldBe items.toSet
+    store.size shouldBe items.size
+    r.servedItems shouldBe items.size
   }
 }

@@ -8,7 +8,7 @@ import graft.model.Schemas
 
 class ValidatorSpec extends SparkSpec {
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.SparkEntry.FixturesDir
 
   test("processStreams unions files, drops corrupt and null rows") {
     val df = Validator.processStreams(spark,
@@ -118,6 +118,26 @@ class ValidatorSpec extends SparkSpec {
       Validator.processReferenceData(spark, s"$dir/r.csv")
     }
     e.getMessage should include("Missing required columns")
+    val staged = intercept[IllegalArgumentException] {
+      Validator.stageReferenceData(spark, s"$dir/r.csv", s"$dir/staged")
+    }
+    staged.getMessage should include("Missing required columns")
+  }
+
+  test("stageReferenceData stages processReferenceData's rows without caching the parse") {
+    val out = tmpDir("stagedref")
+    for (dim <- Seq("songs", "users")) withClue(s"$dim: ") {
+      val csv = s"$fixtures/$dim.csv"
+      spark.catalog.clearCache()
+      Validator.stageReferenceData(spark, csv, s"$out/$dim")
+      spark.sharedState.cacheManager.isEmpty shouldBe true
+      val staged = spark.read.parquet(s"$out/$dim")
+      val cached = Validator.processReferenceData(spark, csv)
+      staged.schema.map(f => f.name -> f.dataType) shouldBe
+        cached.schema.map(f => f.name -> f.dataType)
+      staged.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
+        cached.collect().map(_.toSeq).sortBy(_.mkString("|"))
+    }
   }
 
   test("PathUtil cleans doubled slashes but preserves scheme") {
