@@ -9,6 +9,27 @@ import org.apache.spark.sql.SparkSession
   * splitting), explicit shuffle parallelism (never the 200 default), UTC
   * session time zone (oracle parity + deterministic `date_trunc` /
   * `unix_timestamp`, see SURVEY §7.4.4).
+  *
+  * Static SQL confs belong here and nowhere else: Spark reads them once
+  * per JVM, so a session built any other way first keeps Spark's
+  * defaults for the whole JVM, and a runtime `spark.conf.set` cannot
+  * change them.
+  *
+  * One of them is the capacity of Spark's JVM-global cache of compiled
+  * whole-stage-codegen classes, `spark.sql.codegen.cache.maxEntries`
+  * (default 100), set to 1000 here. One `PipelineJob.run` needs about
+  * 150 generated classes. Spark builds the cache with Guava's
+  * `maximumSize` at the default concurrency level 4, i.e. four LRU
+  * segments of a quarter of the capacity each (about 25 at the default),
+  * so the pipeline's working set cycled through them, evicted itself, and
+  * every warm run recompiled ~140 classes whose source had not changed.
+  * At 1000 each segment holds 250, more than the whole working set, so
+  * no segment overflows however the classes hash, and a warm run
+  * compiles nothing. The cache is sized once, when
+  * `CodeGenerator` is first touched, from the active session's conf at
+  * that moment. A cold JVM's first run compiles the same ~150 classes
+  * either way, so the saving is for warm sessions only: a long-lived
+  * driver, streaming micro-batches, repeated interactive queries.
   */
 object GraftSession {
   def builder(appName: String = "graft", cpus: Int = defaultCpus): SparkSession.Builder =
@@ -27,6 +48,7 @@ object GraftSession {
       // session construction, not inside readers (round-1 verdict #7).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(

@@ -47,7 +47,27 @@ object FsUtil {
     * failed write look already-processed on the next run (stale staged
     * data served with `changed=false`).
     */
-  def checksumChanged(spark: SparkSession, input: String, ledgerPath: String): Boolean = {
+  def checksumChanged(spark: SparkSession, input: String, ledgerPath: String): Boolean =
+    checksumIfChanged(spark, input, ledgerPath).isDefined
+
+  /** S11 (commit phase) — persist `input`'s current MD5 to the ledger.
+    * Call only after the reprocessed output has been written. This hashes
+    * the file again: if it can be replaced while it is processed, use
+    * [[checksumIfChanged]] and [[recordChecksum]] instead.
+    */
+  def commitChecksum(spark: SparkSession, input: String, ledgerPath: String): Unit =
+    recordChecksum(spark, ledgerPath, md5Hex(spark, input))
+
+  /** S11 (check phase), hashing once: `Some(md5)` of `input` iff it
+    * differs from the ledger's, else `None`. Read-only, like
+    * [[checksumChanged]]. Commit THIS hash with [[recordChecksum]] once
+    * the output derived from the file is written: the ledger then vouches
+    * only for content read before the processing began. A file replaced
+    * during the processing makes the next check report a change (one
+    * harmless re-run), never a stale "unchanged".
+    */
+  def checksumIfChanged(spark: SparkSession, input: String,
+                        ledgerPath: String): Option[String] = {
     val current = md5Hex(spark, input)
     val lp      = new Path(PathUtil.cleanPath(ledgerPath))
     val lfs     = fs(spark, lp)
@@ -57,28 +77,27 @@ object FsUtil {
         val in = lfs.open(lp)
         try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
       }
-    !prior.contains(current)
+    Some(current).filterNot(prior.contains)
   }
 
-  /** S11 (commit phase) — persist `input`'s current MD5 to the ledger.
-    * Call only after the reprocessed output has been written.
+  /** S11 (commit phase) — persist a hash taken by [[checksumIfChanged]]
+    * to the ledger.
     */
-  def commitChecksum(spark: SparkSession, input: String, ledgerPath: String): Unit = {
-    val current = md5Hex(spark, input)
-    val lp      = new Path(PathUtil.cleanPath(ledgerPath))
-    val out     = fs(spark, lp).create(lp, true)
-    try out.write(current.getBytes("UTF-8")) finally out.close()
+  def recordChecksum(spark: SparkSession, ledgerPath: String, md5: String): Unit = {
+    val lp  = new Path(PathUtil.cleanPath(ledgerPath))
+    val out = fs(spark, lp).create(lp, true)
+    try out.write(md5.getBytes("UTF-8")) finally out.close()
   }
 
   /** S11, single-shot form: check AND advance the ledger in one call.
     * Only safe when there is no downstream write to gate (the original
     * reference shape); pipelines should use the split
-    * [[checksumChanged]]/[[commitChecksum]] pair instead.
+    * [[checksumIfChanged]]/[[recordChecksum]] pair instead.
     */
   def contentChanged(spark: SparkSession, input: String, ledgerPath: String): Boolean = {
-    val changed = checksumChanged(spark, input, ledgerPath)
-    if (changed) commitChecksum(spark, input, ledgerPath)
-    changed
+    val changed = checksumIfChanged(spark, input, ledgerPath)
+    changed.foreach(recordChecksum(spark, ledgerPath, _))
+    changed.isDefined
   }
 
   /** S12 — archival move (`dags/music_streaming_pipeline.py:722-813`):

@@ -101,12 +101,14 @@ object PipelineJob {
     */
   private def loadDim(spark: SparkSession, csv: String, staged: String,
                       ledger: String): DataFrame = {
-    val changed = FsUtil.checksumChanged(spark, csv, ledger)
-    if (changed || !FsUtil.exists(spark, staged)) {
+    // hashed once, before the parse: the ledger only ever vouches for
+    // content read before staging began
+    val changed = FsUtil.checksumIfChanged(spark, csv, ledger)
+    if (changed.isDefined || !FsUtil.exists(spark, staged)) {
       Validator.stageReferenceData(spark, csv, staged)
       // ledger advances only after the staged write succeeded — a crash
       // mid-write must leave `changed=true` for the next run
-      FsUtil.commitChecksum(spark, csv, ledger)
+      changed.foreach(FsUtil.recordChecksum(spark, ledger, _))
     }
     ParquetIO.read(spark, staged)
   }

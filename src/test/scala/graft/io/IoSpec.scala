@@ -107,6 +107,21 @@ class IoSpec extends SparkSpec {
     FsUtil.checksumChanged(spark, f, ledger) shouldBe true
   }
 
+  test("FsUtil CDC: a file replaced between check and commit reads as changed next time") {
+    val base = tmpDir("cdc3")
+    val f = java.nio.file.Paths.get(s"$base/songs.csv")
+    java.nio.file.Files.writeString(f, "a,b\n1,2\n")
+    val ledger = s"$base/ledger.md5"
+    val pending = FsUtil.checksumIfChanged(spark, f.toString, ledger)
+    pending shouldBe Some(FsUtil.md5Hex(spark, f.toString))
+    // replaced while the old content is being staged
+    java.nio.file.Files.writeString(f, "a,b\n1,3\n")
+    pending.foreach(FsUtil.recordChecksum(spark, ledger, _)) // "write succeeded"
+    FsUtil.checksumChanged(spark, f.toString, ledger) shouldBe true
+    FsUtil.checksumIfChanged(spark, f.toString, ledger) shouldBe
+      Some(FsUtil.md5Hex(spark, f.toString))
+  }
+
   test("FsUtil.archive moves files under <root>/<ts>/<kind>/ and deletes source") {
     val base = tmpDir("arch")
     val f = s"$base/in/streams1.csv"

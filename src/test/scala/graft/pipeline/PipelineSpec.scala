@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftSparkInternals
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -98,6 +99,16 @@ class PipelineSpec extends SparkSpec {
     val a = spark.read.parquet(s"$base/a/trending_kpis").collect().map(_.toSeq).toSet
     val b = spark.read.parquet(s"$base/b/trending_kpis").collect().map(_.toSeq).toSet
     b shouldBe a
+  }
+
+  test("a warm run compiles no new generated classes") {
+    // the counter is JVM-global: forked suites run one at a time, and the
+    // first run below fills the codegen cache with the whole working set
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cold")), Some(new KpiSink.InMemoryKvStore()))
+    val before = compiled.getCount
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_warm")), Some(new KpiSink.InMemoryKvStore()))
+    (compiled.getCount - before) shouldBe 0L
   }
 
   private def fixtureConfig(base: String, bulk: Boolean = false) = PipelineJob.Config(
