@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 /** Generator for `OPERATORS.md` — the registry index the round-9 verdict
   * asked for (item 7): one row per `SparkEntry.queries` entry with the
-  * implementing file:line, oracle gating, bench tier, pinned shuffle
-  * budget, and plan-audit note, derived MECHANICALLY from the registry +
-  * [[graft.ops.PlanAudit]] maps + the sources themselves (the entry's
-  * lambda text names the op object it calls; the object's `def` line
-  * gives the anchor). `OperatorsDocSpec` regenerates and diffs the
-  * checked-in file, so the index can never go stale.
+  * implementing file and symbol, oracle gating, bench tier, pinned
+  * shuffle budget, and plan-audit note, derived MECHANICALLY from the
+  * registry + [[graft.ops.PlanAudit]] maps + the sources themselves (the
+  * entry's lambda text names the op object and member it calls).
+  * Anchors read `path#member`, never a line number, so an edit that
+  * only moves code leaves the index unchanged. `OperatorsDocSpec`
+  * regenerates and diffs the checked-in file, so the index can never go
+  * stale.
   */
 object OperatorsDoc {
 
@@ -33,17 +35,16 @@ object OperatorsDoc {
       .groupBy(_._1).view.mapValues(_.head._2).toMap
   }
 
-  /** 1-based line of the first `def`/`val` named `member` in `file`. */
-  private def memberLine(file: String, member: String): Option[Int] = {
+  /** Whether `file` defines a `def`/`val` named `member`. */
+  private def definesMember(file: String, member: String): Boolean = {
     val pat = (s"""\\b(def|val) $member\\b""").r
-    Files.readAllLines(Paths.get(file)).asScala.zipWithIndex.collectFirst {
-      case (l, i) if pat.findFirstIn(l).isDefined => i + 1
-    }
+    Files.readAllLines(Paths.get(file)).asScala.exists(l => pat.findFirstIn(l).isDefined)
   }
 
-  /** entry name -> (file, line) of the primary op it calls, parsed from
+  /** entry name -> `path#member` of the primary op it calls, parsed from
     * the entry's lambda text in SparkEntry.scala. Entries whose logic is
-    * inline (pure DataFrame chains) anchor to their own registry line.
+    * inline (pure DataFrame chains) anchor to their own registry key,
+    * `SparkEntry.scala#<entry>`.
     */
   private def entryAnchors(names: Seq[String]): Map[String, String] = {
     val entryFile = s"$srcRoot/SparkEntry.scala"
@@ -57,21 +58,17 @@ object OperatorsDoc {
     val ordered = starts.toSeq.sortBy(_._2)
     val callPat = """(\w+)\.(\w+)\(""".r
     names.map { name =>
-      val anchor = starts.get(name) match {
-        case None => s"$entryFile"
-        case Some(at) =>
-          val next = ordered.collectFirst { case (_, i) if i > at => i }
-            .getOrElse(src.size)
-          val snippet = src.slice(at, next).mkString("\n")
-          callPat.findAllMatchIn(snippet)
-            .collectFirst {
-              case m if objs.contains(m.group(1)) &&
-                memberLine(objs(m.group(1)), m.group(2)).isDefined =>
-                s"${objs(m.group(1))}:${memberLine(objs(m.group(1)), m.group(2)).get}"
-            }
-            .getOrElse(s"$entryFile:${at + 1}")
+      val opAnchor = starts.get(name).flatMap { at =>
+        val next = ordered.collectFirst { case (_, i) if i > at => i }
+          .getOrElse(src.size)
+        val snippet = src.slice(at, next).mkString("\n")
+        callPat.findAllMatchIn(snippet).collectFirst {
+          case m if objs.contains(m.group(1)) &&
+            definesMember(objs(m.group(1)), m.group(2)) =>
+            s"${objs(m.group(1))}#${m.group(2)}"
+        }
       }
-      name -> anchor
+      name -> opAnchor.getOrElse(s"$entryFile#$name")
     }.toMap
   }
 

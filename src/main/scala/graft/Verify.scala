@@ -1,14 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [entry…]`: named entries
+  * restrict both the parquet dirs and oracle_sql.json to that subset, so
+  * one changed query can be parity-checked (`tools/check.py`) without
+  * re-running the registry; unknown names are reported on stderr.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
+    def picked[V](m: Map[String, V]): Map[String, V] =
+      if (names.isEmpty) m else m.filter { case (n, _) => names(n) }
+    val queries = picked(SparkEntry.queries)
+    val unknown = names -- queries.keySet
+    if (unknown.nonEmpty)
+      System.err.println(s"[verify] unknown entries: ${unknown.toSeq.sorted.mkString(", ")}")
     val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -29,21 +40,24 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = picked(SparkEntry.oracleSql)
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in hand-written oracle SQL would
+    * otherwise make `json.load` of oracle_sql.json fail and silently
+    * skip every correctness check.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -59,10 +59,10 @@ object Par {
   final case class AuditRec(inputParts: Int, width: Int, spread: Boolean,
                             site: String)
 
-  // Test-only invocation recorder behind the width audit
-  // (WidthAuditSpec): None in production, so the guard's hot path pays
-  // nothing. Enabled per-thread is unnecessary — the audit runs entries
-  // serially inside one suite.
+  // Invocation recorder behind the width audit (WidthAuditSpec) and
+  // graft.QueryProfile's width fields: None unless one of them records,
+  // so the guard's hot path pays nothing. Enabled per-thread is
+  // unnecessary — both construct entries serially.
   @volatile private var audit: Option[scala.collection.mutable.ListBuffer[AuditRec]] = None
 
   private def callSite(): String =

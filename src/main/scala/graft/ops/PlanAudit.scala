@@ -186,8 +186,10 @@ object PlanAudit {
     * round-robin spreads, the exact number it must fire. Dropping a
     * guard wrap from any operator on the entry's path lowers the count
     * and fails the audit; a new dense stage raises it and needs an
-    * explicit pin raise. Generated by `runMain graft.WidthCounts`
-    * (run it with SPARK_GRAFT_CPUS=4 to match the test session).
+    * explicit pin raise. An entry's count is the `width_spreads` field
+    * of its `graft.QueryProfile` record against the single-row-group
+    * copy `WidthAuditSpec` writes (run with SPARK_GRAFT_CPUS=4 to match
+    * the test session).
     */
   val widthGuardPins: Map[String, Int] = Map(
     "q_abtt" -> 3, "q_anisotropy" -> 1, "q_avg_precision" -> 1,
@@ -223,7 +225,8 @@ object PlanAudit {
     "TextAnalysis.scala" -> 6)
 
   /** Pinned shuffle budgets for headline queries (measured by
-    * `graft.ShuffleCounts`): a NEW Exchange in one of these plans is a
+    * `Bucketing.shuffleCount`, the `exchanges` field of a
+    * `graft.QueryProfile` record): a NEW Exchange in one of these plans is a
     * regression a human signs off on by raising the pin, never a silent
     * diff. Every groupBy/join/window costs a shuffle at 100 TB — these
     * numbers ARE the scale story of the flagship paths (q_bpe_tokens at

@@ -120,16 +120,28 @@ object Validator {
     val files = paths.flatMap(PathUtil.splitPaths)
     require(files.nonEmpty, "no stream files given")
     val parsed = (if (bulk) Seq(files) else files.map(Seq(_))).map { batch =>
-      val (raw, clean, corrupt) = CsvSource.readSplitCached(spark, Schemas.streams, batch)
-      quarantinePath.foreach { q =>
-        ParquetIO.quarantineJson(
-          if (bulk) corrupt.withColumn("_source_file", input_file_name()) else corrupt, q)
-      }
+      val (raw, clean, corrupt) =
+        if (bulk) bulkSplitCached(spark, batch)
+        else CsvSource.readSplitCached(spark, Schemas.streams, batch)
+      quarantinePath.foreach(ParquetIO.quarantineJson(corrupt, _))
       validateColumns(clean, Schemas.requiredStreamsColumns,
         if (bulk) s"streams files: ${batch.size}" else s"streams file: ${batch.head}")
       (cleanStreams(clean), raw)
     }
     (parsed.map(_._1).reduce(_ unionAll _), parsed.map(_._2))
+  }
+
+  /** The bulk path's cached parse, with each row's `_source_file` taken
+    * inside the parse: over a cached relation `input_file_name()` reads
+    * `""`, so it must be evaluated by the scan, before `.cache()`. The
+    * clean side drops the column again (the per-file fold has none).
+    */
+  private def bulkSplitCached(spark: SparkSession,
+                              paths: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+    val raw = CsvSource.readPermissive(spark, Schemas.streams, paths)
+      .withColumn("_source_file", input_file_name()).cache()
+    (raw, CsvSource.cleanRows(raw).drop("_source_file"),
+      raw.filter(col(CsvSource.CorruptCol).isNotNull))
   }
 
   /** Idempotency guard for the append-mode staging boundary (SURVEY

@@ -28,11 +28,19 @@ class OperatorsDocSpec extends AnyFunSuite with Matchers {
     SparkEntry.queries.keys.foreach { n =>
       doc should include (s"| `$n` |")
     }
-    // every anchor points at an existing file
-    val anchor = """\| `([^`]+\.scala)(:\d+)?` \|""".r
-    anchor.findAllMatchIn(doc).map(_.group(1)).toSet.foreach { (f: String) =>
-      withClue(s"anchor file $f") {
+    // every anchor is `path#symbol` and the named file defines the
+    // symbol: an op's `def`/`val`, or an inline entry's registry key
+    val row = """^\| `\w+` \| `([^`]+\.scala)#(\w+)` \|""".r
+    val anchors = doc.linesIterator.flatMap(row.findFirstMatchIn)
+      .map(m => (m.group(1), m.group(2))).toSeq
+    anchors.size shouldBe SparkEntry.queries.size
+    anchors.distinct.foreach { case (f, sym) =>
+      withClue(s"anchor $f#$sym") {
         Files.exists(Paths.get(f)) shouldBe true
+        val defined =
+          if (f.endsWith("/SparkEntry.scala")) s"\"$sym\" ->".r
+          else s"\\b(def|val) $sym\\b".r
+        defined.findFirstIn(Files.readString(Paths.get(f))) should not be empty
       }
     }
   }

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.{SparkEntry, SparkSpec, WidthCounts}
+import graft.{SparkEntry, SparkSpec, TestTables}
 
 /** Dense-stage width audit (r12 verdict #1): the r12 probe found that a
   * corpus fitting one parquet row group scans as ONE partition, and
@@ -34,9 +34,27 @@ import graft.{SparkEntry, SparkSpec, WidthCounts}
   */
 class WidthAuditSpec extends SparkSpec {
 
+  /** Copy each parquet table in `sfDir` to `narrowDir` as ONE file
+    * (one row group): the fixture every width-audit construction runs
+    * against. Events' ts column round-trips through the adaptive read,
+    * so the copy is always plain TIMESTAMP — still handled by
+    * `TestTables.events`.
+    */
+  private def writeNarrowFixture(spark: SparkSession, sfDir: String,
+                                 narrowDir: String): Unit = {
+    val tables = new java.io.File(sfDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName)
+    tables.foreach { t =>
+      val name = t.stripSuffix(".parquet")
+      val df = if (name == "events") TestTables.events(spark, sfDir)
+               else spark.read.parquet(s"$sfDir/$t")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$narrowDir/$t")
+    }
+  }
+
   private lazy val narrowDir: String = {
     val dir = tmpDir("graft_narrow_audit")
-    WidthCounts.writeNarrowFixture(spark, "/root/testdata/sf0.001", dir)
+    writeNarrowFixture(spark, "/root/testdata/sf0.001", dir)
     dir
   }
 

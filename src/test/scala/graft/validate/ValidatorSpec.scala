@@ -94,6 +94,29 @@ class ValidatorSpec extends SparkSpec {
     val quarantined = spark.read.json(s"$q/corrupt_records")
     quarantined.count() shouldBe 3
     quarantined.columns should contain("_source_file")
+
+    // provenance: each bulk-quarantined row names the file that the
+    // per-file path quarantines it from
+    val files = Seq("streams_a.csv", "streams_b.csv")
+    // the quarantine's `_corrupt_record` field is data here, not the
+    // JSON reader's own corrupt-record column
+    def readQuarantine(dir: String) = spark.read
+      .option("columnNameOfCorruptRecord", "_unparsed_json").json(s"$dir/corrupt_records")
+    val origin = files.flatMap { f =>
+      val dir = tmpDir("perfileq")
+      Validator.processStreams(spark, Seq(s"$fixtures/$f"), Some(dir))
+      readQuarantine(dir).select(CsvSource.CorruptCol).collect().map(_.getString(0) -> f)
+    }.toMap
+    val both = tmpDir("bulkq2")
+    Validator.processStreamsBulk(spark, files.map(f => s"$fixtures/$f"), Some(both))
+    val rows = readQuarantine(both).select(CsvSource.CorruptCol, "_source_file").collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    rows.length shouldBe origin.size
+    rows.foreach { case (raw, source) =>
+      withClue(s"quarantined row $raw: ") {
+        source should endWith(origin(raw))
+      }
+    }
   }
 
   test("processStreams: empty path list and missing-columns file both fail loudly") {
