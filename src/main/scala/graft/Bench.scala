@@ -100,14 +100,6 @@ object Bench {
     // unrelated entries.
     val enriched = TestTables.enriched(spark, sfDir)
 
-    val kpiNames = Set("kpi_user", "kpi_genre_daily", "kpi_genre_top_songs",
-      "kpi_genre_top_genres", "kpi_trending")
-    val plans: Seq[(String, () => DataFrame)] = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, _) if kpiNames(name) =>
-        name -> (() => SparkEntry.kpiOverEnriched(name, enriched))
-      case (name, fn) => name -> (() => fn(spark, sfDir))
-    }
-
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
     // Cache hygiene between queries: several entries cache intermediate
@@ -155,9 +147,12 @@ object Bench {
     // that breached the r11 window
     val entryWall = scala.collection.mutable.LinkedHashMap[String, Double]()
 
-    val medians: Seq[(String, Double)] = plans.map { case (name, fn) =>
+    val medians: Seq[(String, Double)] = SparkEntry.entries.sortBy(_.name).map { e =>
+      val name = e.name
+      val fn: () => DataFrame =
+        e.kpi.fold(() => e.build(spark, sfDir))(kpi => () => kpi(enriched))
       val entryStart = System.nanoTime()
-      val isKpi = kpiNames(name)
+      val isKpi = e.kpi.isDefined
       clearState()
       sinceGc += 1
       if (sinceGc >= gcEvery) forceGc()
@@ -187,8 +182,7 @@ object Bench {
         // same per-pass treatment: their passes churn GBs of garbage, so
         // a collection triggered by pass N must never land inside N+1.
         val cachesInternally = spark.sparkContext.getPersistentRDDs.size > rddsBefore
-        val resetEachRun = cachesInternally ||
-          SparkEntry.heavyOracleBaselines(name) || isKpi
+        val resetEachRun = cachesInternally || e.heavy || isKpi
         val passes = if (!resetEachRun && warmSecs < fastCutoff) 1 else 3
         // slow-but-ordinary entries: one clean heap for the timed block
         if (passes > 1 && !resetEachRun) forceGc()
@@ -211,7 +205,7 @@ object Bench {
     // but live in their own `heavy_oracle` section and are excluded from
     // the headline total — the headline reflects production regimes only
     // (each heavy entry's production twin IS in the headline set).
-    val (heavy, prod) = medians.partition(m => SparkEntry.heavyOracleBaselines(m._1))
+    val (heavy, prod) = medians.partition(m => SparkEntry.byName(m._1).heavy)
     val ok = prod.filter(_._2 >= 0)
     val heavyOk = heavy.filter(_._2 >= 0)
     val total = ok.map(_._2).sum

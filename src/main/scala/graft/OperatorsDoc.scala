@@ -5,11 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Generator for `OPERATORS.md` — the registry index the round-9 verdict
-  * asked for (item 7): one row per `SparkEntry.queries` entry with the
+  * asked for (item 7): one row per `SparkEntry.entries` record with the
   * implementing file and symbol, oracle gating, bench tier, pinned
   * shuffle budget, and plan-audit note, derived MECHANICALLY from the
-  * registry + [[graft.ops.PlanAudit]] maps + the sources themselves (the
-  * entry's lambda text names the op object and member it calls).
+  * records + the sources themselves (the record's builder text names
+  * the op object and member it calls).
   * Anchors read `path#member`, never a line number, so an edit that
   * only moves code leaves the index unchanged. `OperatorsDocSpec`
   * regenerates and diffs the checked-in file, so the index can never go
@@ -18,6 +18,9 @@ import scala.jdk.CollectionConverters._
 object OperatorsDoc {
 
   private val srcRoot = "src/main/scala/graft"
+
+  /** How a registry record opens in SparkEntry.scala; group 1 is its name. */
+  private val recordKey = """Entry(?:\.kpi)?\("(\w+)",""".r
 
   /** object name -> source path, from a one-pass scan of the sources. */
   private def objectFiles(): Map[String, String] = {
@@ -29,9 +32,9 @@ object OperatorsDoc {
           objPat.findFirstMatchIn(l).map(m => m.group(1) -> p.toString))
       }
       .toList
-      // first definition wins; SparkEntry itself is excluded as a target
+      // first definition wins; the registry file is excluded as a target
       // so entries resolve to the op file they call into
-      .filterNot(_._1 == "SparkEntry")
+      .filterNot(_._2.endsWith("/SparkEntry.scala"))
       .groupBy(_._1).view.mapValues(_.head._2).toMap
   }
 
@@ -42,19 +45,18 @@ object OperatorsDoc {
   }
 
   /** entry name -> `path#member` of the primary op it calls, parsed from
-    * the entry's lambda text in SparkEntry.scala. Entries whose logic is
-    * inline (pure DataFrame chains) anchor to their own registry key,
+    * the record's text in SparkEntry.scala, which opens with
+    * `Entry("<name>",` (or `Entry.kpi("<name>",`). Entries whose logic is
+    * inline (pure DataFrame chains) anchor to their own record,
     * `SparkEntry.scala#<entry>`.
     */
   private def entryAnchors(names: Seq[String]): Map[String, String] = {
     val entryFile = s"$srcRoot/SparkEntry.scala"
     val src = Files.readAllLines(Paths.get(entryFile)).asScala.toVector
     val objs = objectFiles()
-    val defPat = """"(q_\w+|kpi_\w+|entry)" ->""".r
-    // first definition line of each entry (queries-map region comes first)
     val starts: Map[String, Int] = src.zipWithIndex.flatMap { case (l, i) =>
-      defPat.findFirstMatchIn(l).map(m => m.group(1) -> i)
-    }.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
+      recordKey.findFirstMatchIn(l).map(m => m.group(1) -> i)
+    }.toMap
     val ordered = starts.toSeq.sortBy(_._2)
     val callPat = """(\w+)\.(\w+)\(""".r
     names.map { name =>
@@ -73,30 +75,29 @@ object OperatorsDoc {
   }
 
   def render(): String = {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val anchors = entryAnchors(names)
-    val oracles = SparkEntry.oracleSql
+    val entries = SparkEntry.entries.sortBy(_.name)
+    val anchors = entryAnchors(entries.map(_.name))
+    val heavy = entries.count(_.heavy)
     val sb = new StringBuilder
     sb ++= "# OPERATORS — generated registry index\n\n"
     sb ++= "Generated by `sbt 'runMain graft.OperatorsDoc'`; kept fresh by\n"
     sb ++= "`OperatorsDocSpec` (regenerate-and-diff). One row per oracle-gated\n"
-    sb ++= "registry entry in `SparkEntry.queries`.\n\n"
-    sb ++= s"- entries: **${names.size}** (${names.count(oracles.contains)} DuckDB-oracle-gated)\n"
-    sb ++= s"- bench tiers: ${names.size - SparkEntry.heavyOracleBaselines.size} headline, " +
-      s"${SparkEntry.heavyOracleBaselines.size} heavy-oracle (gated exact baselines, " +
+    sb ++= "registry entry in `SparkEntry.entries`.\n\n"
+    sb ++= s"- entries: **${entries.size}** (${entries.size} DuckDB-oracle-gated)\n"
+    sb ++= s"- bench tiers: ${entries.size - heavy} headline, " +
+      s"$heavy heavy-oracle (gated exact baselines, " +
       "timed every round, excluded from the headline total)\n"
-    sb ++= s"- pinned shuffle budgets: ${graft.ops.PlanAudit.shuffleBudget.size} " +
-      "(`PlanAudit.shuffleBudget`, enforced by `PlanAuditSpec`)\n"
-    sb ++= s"- O(n*m)-plan allowlist: ${graft.ops.PlanAudit.allowForbidden.size} entries " +
-      "with written reasons (`PlanAudit.allowForbidden`)\n\n"
+    sb ++= s"- pinned shuffle budgets: ${entries.count(_.shufflePin.isDefined)} " +
+      "(`Entry.shufflePin`, enforced by `PlanAuditSpec`)\n"
+    sb ++= s"- O(n*m)-plan allowlist: ${entries.count(_.planNote.isDefined)} entries " +
+      "with written reasons (`Entry.planNote`)\n\n"
     sb ++= "| entry | impl | oracle | tier | shuffle pin | plan note |\n"
     sb ++= "|---|---|---|---|---|---|\n"
-    names.foreach { n =>
-      val tier = if (SparkEntry.heavyOracleBaselines(n)) "heavy-oracle" else "headline"
-      val pin = graft.ops.PlanAudit.shuffleBudget.get(n).map(_.toString).getOrElse("")
-      val note = graft.ops.PlanAudit.allowForbidden.getOrElse(n, "")
-      val oracle = if (oracles.contains(n)) "duckdb" else "spec"
-      sb ++= s"| `$n` | `${anchors(n)}` | $oracle | $tier | $pin | ${note.replace("|", "/")} |\n"
+    entries.foreach { e =>
+      val tier = if (e.heavy) "heavy-oracle" else "headline"
+      val pin = e.shufflePin.map(_.toString).getOrElse("")
+      val note = e.planNote.getOrElse("")
+      sb ++= s"| `${e.name}` | `${anchors(e.name)}` | duckdb | $tier | $pin | ${note.replace("|", "/")} |\n"
     }
     sb.result()
   }

@@ -27,15 +27,16 @@ import graft.ops.{Bucketing, Par}
   *      on: construction wall, round-robin spreads and their call sites;
   *   3. plan it through `queryExecution.executedPlan`: planning wall.
   *      The exchange count ([[Bucketing.shuffleCount]], the number the
-  *      `PlanAudit` shuffle pins hold) and [[duplicateSubtree]] read
-  *      this plan;
+  *      registry's shuffle pins hold) reads this plan;
   *   4. one untimed warm-up through the `noop` sink (JIT, codegen);
   *   5. three timed runs, each after a reset and over a freshly
   *      constructed DataFrame: the wall of the `noop` write, as [[Bench]]
   *      times it. A listener scoped by job group attributes jobs, stages
   *      and tasks to each run; the record keeps those of the median run.
   *      The row count is the root's `numOutputRows` in the last run's
-  *      executed plan.
+  *      executed plan, and [[duplicateSubtree]] judges that final
+  *      adaptive plan: a subtree the planned frame shows twice but AQE
+  *      runs once (a reused exchange or stage) is not flagged.
   *
   * The call owns the session while it runs: it clears the SQL cache and
   * sets the calling thread's job group. It leaves the SQL cache empty,
@@ -81,8 +82,8 @@ object QueryProfile {
   private val timedRuns = 3
 
   def profile(spark: SparkSession, sfDir: String, entry: String): Record = {
-    val build = SparkEntry.queries.getOrElse(entry,
-      throw new IllegalArgumentException(s"unknown registry entry: $entry"))
+    val build = SparkEntry.byName.getOrElse(entry,
+      throw new IllegalArgumentException(s"unknown registry entry: $entry")).build
     val sc = spark.sparkContext
     val keep = sc.getPersistentRDDs.keySet
     def reset(): Unit = {
@@ -102,9 +103,8 @@ object QueryProfile {
       val built = Try(timed(build(spark, sfDir)))
       val spreads = Par.auditStop().filter(_.spread)
       val (df, constructMs) = built.get
-      val (plan, planMs) = timed(df.queryExecution.executedPlan)
+      val planMs = timed(df.queryExecution.executedPlan)._2
       val exchanges = Bucketing.shuffleCount(df)
-      val duplicate = duplicateSubtree(plan)
       materialize(df)
       val execMs = (1 to timedRuns).map { run =>
         reset()
@@ -115,8 +115,10 @@ object QueryProfile {
       GraftSparkInternals.drainListenerBus(sc)
       val medianRun = execMs.indices.sortBy(execMs).apply(timedRuns / 2) + 1
       val (jobs, stages) = runs.of(group(medianRun))
-      Record(entry, constructMs, planMs, execMs, jobs, stages, exchanges, duplicate,
-        spreads.size, spreads.map(_.site).distinct.sorted, writes.lastQuery.flatMap(outputRows))
+      val finalPlan = writes.lastQuery
+      Record(entry, constructMs, planMs, execMs, jobs, stages, exchanges,
+        finalPlan.flatMap(duplicateSubtree), spreads.size,
+        spreads.map(_.site).distinct.sorted, finalPlan.flatMap(outputRows))
     } finally {
       reset()
       sc.removeSparkListener(runs)
@@ -279,7 +281,7 @@ object QueryProfile {
     require(args.nonEmpty, "usage: QueryProfile <sfDir> [entry…]")
     val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
+                else SparkEntry.entries.map(_.name).sorted
     val spark = GraftSession.get("graft-profile")
     names.foreach { n =>
       println(

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+/** Driver-run correctness dump: each registry entry's result → parquet,
+  * plus its oracle SQL in oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/check.py`).
   *
   * `runMain graft.Verify <sfDir> <outDir> [entry…]`: named entries
   * restrict both the parquet dirs and oracle_sql.json to that subset, so
@@ -11,19 +12,17 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    def picked[V](m: Map[String, V]): Map[String, V] =
-      if (names.isEmpty) m else m.filter { case (n, _) => names(n) }
-    val queries = picked(SparkEntry.queries)
-    val unknown = names -- queries.keySet
+    val picked = SparkEntry.entries.filter(e => names.isEmpty || names(e.name))
+    val unknown = names -- picked.map(_.name)
     if (unknown.nonEmpty)
       System.err.println(s"[verify] unknown entries: ${unknown.toSeq.sorted.mkString(", ")}")
     val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    picked.foreach { entry =>
+      try entry.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${entry.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${entry.name} failed: ${e.getMessage}")
       }
       // some entries cache scratch frames internally (dedup stores,
       // shingle sets); drop them so 60+ queries don't accumulate
@@ -40,7 +39,8 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    val json = picked(SparkEntry.oracleSql)
+    // in a name-keyed Map's key order, the order the file has always had
+    val json = picked.map(e => e.name -> e.oracleSql).toMap
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -154,16 +154,6 @@ object StreamingKpis {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(Seq(idCol))
 
-  /** Serve a streaming item frame into the KV store: each micro-batch
-    * flows through [[graft.serve.KpiSink.write]] (executor-side batches
-    * of 25 with backoff) — the streaming closing of the reference's
-    * batch-only KPI→DynamoDB loop. Use `update` output upstream: the
-    * store's overwrite-by-(id, timestamp) makes re-emitted groups (and
-    * retried micro-batches) idempotent, so a windowed aggregation can
-    * publish refined values as events arrive and the store always holds
-    * the latest. Blocks until the trigger drains; returns micro-batches
-    * executed.
-    */
   /** Continuously-maintained latest-row snapshot of a changelog
     * stream: per key, the row with the maximum (ts, tie) seen so far —
     * the streaming form of [[graft.ops.Cdc.latestPerKey]], expressed
@@ -189,6 +179,16 @@ object StreamingKpis {
       .select(col(keyCol) +: dataCols.map(c => col(s"_latest.$c")): _*)
   }
 
+  /** Serve a streaming item frame into the KV store: each micro-batch
+    * flows through [[graft.serve.KpiSink.write]] (executor-side batches
+    * of 25 with backoff) — the streaming closing of the reference's
+    * batch-only KPI→DynamoDB loop. Use `update` output upstream: the
+    * store's overwrite-by-(id, timestamp) makes re-emitted groups (and
+    * retried micro-batches) idempotent, so a windowed aggregation can
+    * publish refined values as events arrive and the store always holds
+    * the latest. Blocks until the trigger drains; returns micro-batches
+    * executed.
+    */
   def serveToStore(items: DataFrame, store: graft.serve.KpiSink.KvStore,
                    checkpoint: String,
                    trigger: org.apache.spark.sql.streaming.Trigger =

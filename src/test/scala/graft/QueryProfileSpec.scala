@@ -2,18 +2,18 @@ package graft
 
 import org.apache.spark.sql.ListenerClasses
 
-import graft.ops.{Bucketing, PlanAudit}
+import graft.ops.Bucketing
 
 class QueryProfileSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  // one KPI entry and one entry pinned by PlanAudit.shuffleBudget
+  // one KPI entry and one other entry, both with a shuffle pin
   for (name <- Seq("kpi_user", "q_sessions")) {
     test(s"profile of $name: exchanges, jobs, tasks and rows") {
-      assert(PlanAudit.shuffleBudget.contains(name))
+      assert(SparkEntry.byName(name).shufflePin.isDefined)
       val r = QueryProfile.profile(spark, sfDir, name)
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = SparkEntry.byName(name).build(spark, sfDir)
       r.exchanges shouldBe Bucketing.shuffleCount(df)
       r.jobs should be >= 1
       r.stages.map(_.tasks).sum should be > 0
@@ -29,6 +29,16 @@ class QueryProfileSpec extends SparkSpec {
       .groupBy("l_returnflag").count()
     QueryProfile.duplicateSubtree(agg.union(agg).queryExecution.executedPlan) shouldBe defined
     QueryProfile.duplicateSubtree(agg.queryExecution.executedPlan) shouldBe empty
+  }
+
+  test("duplicate-subtree check passes a self-union whose run reused the exchange") {
+    val agg = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count()
+    val union = agg.union(agg)
+    union.collect()
+    // after the run, executedPlan is the final adaptive plan: AQE ran the
+    // shared aggregate's exchange once and reused it for the second arm
+    QueryProfile.duplicateSubtree(union.queryExecution.executedPlan) shouldBe empty
   }
 
   test("profile leaves no cached frame, persisted RDD or listener behind") {

@@ -2,15 +2,17 @@ package graft.ops
 
 import graft.{SparkEntry, SparkSpec}
 
-/** Registry-wide plan-regression gate: every `SparkEntry.queries` entry is
+/** Registry-wide plan-regression gate: every `SparkEntry.entries` record is
   * planned at sf0.001 and audited for the two scale-killer shapes
   * ([[PlanAudit]]): O(n·m) join nodes and missed broadcasts. Adding a new
   * query with a cartesian/nested-loop plan fails ONE named test here with
   * the offending physical plan printed — the plan contract becomes part of
   * the suite, not a per-round manual `.explain` review.
   *
-  * The allowlist is EXPLICIT and per-query, with the reason each entry is
-  * allowed to carry an O(n·m) node. Two legitimate categories only:
+  * The allowlist is EXPLICIT and per-query: a record's `planNote` is the
+  * reason its entry is allowed to carry an O(n·m) node, and its
+  * `shufflePin` caps the planned exchanges. A missed broadcast has no
+  * allowlist and always fails. Two legitimate O(n·m) categories only:
   *   - `exact = true` oracle baselines: deliberately quadratic ground
   *     truth for a banded/indexed twin that answers the same query (the
   *     twin IS audited — that's the plan that ships).
@@ -23,33 +25,29 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private val allowForbidden = PlanAudit.allowForbidden
-  private val allowMissedBroadcast = PlanAudit.allowMissedBroadcast
-  private val shuffleBudget = PlanAudit.shuffleBudget
-
   // Planning some entries executes bounded prep work (codebook training,
   // CC iteration); at sf0.001 the whole sweep stays cheap.
-  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
+  for (entry <- SparkEntry.entries.sortBy(_.name); name = entry.name) {
     test(s"plan audit: $name") {
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = entry.build(spark, sfDir)
       try {
         val forbidden = PlanAudit.forbiddenJoins(df)
-        if (forbidden.nonEmpty && !allowForbidden.contains(name)) {
+        if (forbidden.nonEmpty && entry.planNote.isEmpty) {
           fail(s"$name has O(n*m) join node(s) ${forbidden.mkString(", ")} and is " +
             s"not allowlisted.\nEither give it an index/band/broadcast-bounded plan " +
-            s"or add an explicit allowlist entry with the reason.\n" +
+            s"or give its record a planNote with the reason.\n" +
             PlanAudit.planString(df))
         }
-        if (forbidden.isEmpty && allowForbidden.contains(name)) {
-          info(s"$name is allowlisted for O(n*m) nodes but its plan is clean — " +
-            "allowlist entry can be removed")
+        if (forbidden.isEmpty && entry.planNote.isDefined) {
+          info(s"$name carries a planNote for O(n*m) nodes but its plan is clean — " +
+            "the note can be removed")
         }
         val missed = PlanAudit.missedBroadcasts(df)
-        if (missed.nonEmpty && !allowMissedBroadcast.contains(name)) {
+        if (missed.nonEmpty) {
           fail(s"$name declines a broadcast the optimizer sized as cheap: " +
             s"${missed.mkString(", ")}\n" + PlanAudit.planString(df))
         }
-        shuffleBudget.get(name).foreach { budget =>
+        entry.shufflePin.foreach { budget =>
           val n = Bucketing.shuffleCount(df)
           if (n > budget)
             fail(s"$name plans $n shuffle exchanges, budget is $budget — a new " +

@@ -15,7 +15,7 @@ import graft.{SparkEntry, SparkSpec, TestTables}
   *  1. every dense-family registry entry is constructed against a
   *     deliberately SINGLE-row-group fixture with the guard's
   *     invocation recorder on, and its round-robin spread count must
-  *     equal the pin in `PlanAudit.widthGuardPins` — dropping a wrap
+  *     equal its registry record's `widthPin` — dropping a wrap
   *     from any operator on an entry's path fails that entry's test
   *     with the sites that DID fire listed;
   *  2. the distinct guarded call sites seen across the whole sweep are
@@ -28,8 +28,8 @@ import graft.{SparkEntry, SparkSpec, TestTables}
   *     the pins stand in for.
   *
   * A NEW dense operator that forgets the wrap is caught by (3)'s
-  * discipline only if a representative is added — which is why the pin
-  * maps fail CLOSED: an entry recording spreads that is not pinned
+  * discipline only if a representative is added — which is why the pins
+  * fail CLOSED: an entry recording spreads that is not pinned
   * fails too, so every guarded path must be enumerated here.
   */
 class WidthAuditSpec extends SparkSpec {
@@ -58,13 +58,13 @@ class WidthAuditSpec extends SparkSpec {
     dir
   }
 
-  private val pins = PlanAudit.widthGuardPins
+  private val pinned = SparkEntry.entries.filter(_.widthPin.isDefined).sortBy(_.name)
 
-  for ((name, pin) <- pins.toSeq.sortBy(_._1)) {
+  for (entry <- pinned; name = entry.name; pin <- entry.widthPin) {
     test(s"width audit: $name spreads $pin dense stage(s) on a narrow scan") {
       Par.auditStart()
       try {
-        SparkEntry.queries(name)(spark, narrowDir)
+        entry.build(spark, narrowDir)
         val spread = Par.auditStop().filter(_.spread)
         if (spread.size != pin)
           fail(s"$name fired ${spread.size} round-robin spreads on the " +
@@ -86,18 +86,16 @@ class WidthAuditSpec extends SparkSpec {
     // here would double PlanAuditSpec's sweep cost, so this leg rides
     // the same narrow fixture but samples the families that share
     // guarded code paths yet are pinned at 0 by omission: entries that
-    // fire any spread while absent from widthGuardPins fail.
-    val sample = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(pins.contains)
-      .filter(n => n.startsWith("q_dedup") || n.startsWith("q_knn") ||
-        n.startsWith("q_embed") || n.startsWith("q_simhash") ||
-        n.startsWith("q_winnow") || n.startsWith("q_semdedup"))
-    val offenders = sample.flatMap { name =>
+    // fire any spread while carrying no widthPin fail.
+    val families = Seq("q_dedup", "q_knn", "q_embed", "q_simhash", "q_winnow", "q_semdedup")
+    val sample = SparkEntry.entries.sortBy(_.name)
+      .filter(e => e.widthPin.isEmpty && families.exists(e.name.startsWith))
+    val offenders = sample.flatMap { entry =>
       Par.auditStart()
       try {
-        SparkEntry.queries(name)(spark, narrowDir)
+        entry.build(spark, narrowDir)
         val spread = Par.auditStop().filter(_.spread)
-        if (spread.nonEmpty) Some(s"$name (${spread.size})") else None
+        if (spread.nonEmpty) Some(s"${entry.name} (${spread.size})") else None
       } catch { case _: Throwable => Par.auditStop(); None }
       finally {
         spark.catalog.clearCache()
@@ -105,16 +103,16 @@ class WidthAuditSpec extends SparkSpec {
       }
     }
     if (offenders.nonEmpty)
-      fail(s"entries fire dense-stage spreads but carry no width pin — add " +
-        s"them to PlanAudit.widthGuardPins: ${offenders.mkString(", ")}")
+      fail(s"entries fire dense-stage spreads but carry no width pin — give " +
+        s"their records a widthPin: ${offenders.mkString(", ")}")
   }
 
   test("width audit: guarded call-site coverage per file matches the pin") {
     val sites = scala.collection.mutable.SortedSet.empty[String]
-    pins.keys.foreach { name =>
+    pinned.foreach { entry =>
       Par.auditStart()
       try {
-        SparkEntry.queries(name)(spark, narrowDir)
+        entry.build(spark, narrowDir)
         Par.auditStop().filter(_.spread).foreach(r => sites += r.site)
       } finally {
         Par.auditStop()
