@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Generator for `OPERATORS.md` — the registry index the round-9 verdict
   * asked for (item 7): one row per `SparkEntry.entries` record with the
-  * implementing file and symbol, oracle gating, bench tier, pinned
-  * shuffle budget, and plan-audit note, derived MECHANICALLY from the
+  * implementing file and symbol, bench tier, pinned shuffle budget, and
+  * plan-audit note, derived MECHANICALLY from the
   * records + the sources themselves (the record's builder text names
   * the op object and member it calls).
   * Anchors read `path#member`, never a line number, so an edit that
@@ -81,9 +81,9 @@ object OperatorsDoc {
     val sb = new StringBuilder
     sb ++= "# OPERATORS — generated registry index\n\n"
     sb ++= "Generated by `sbt 'runMain graft.OperatorsDoc'`; kept fresh by\n"
-    sb ++= "`OperatorsDocSpec` (regenerate-and-diff). One row per oracle-gated\n"
-    sb ++= "registry entry in `SparkEntry.entries`.\n\n"
-    sb ++= s"- entries: **${entries.size}** (${entries.size} DuckDB-oracle-gated)\n"
+    sb ++= "`OperatorsDocSpec` (regenerate-and-diff). One row per registry\n"
+    sb ++= "entry in `SparkEntry.entries`; every entry is gated by its DuckDB oracle SQL.\n\n"
+    sb ++= s"- entries: **${entries.size}**\n"
     sb ++= s"- bench tiers: ${entries.size - heavy} headline, " +
       s"$heavy heavy-oracle (gated exact baselines, " +
       "timed every round, excluded from the headline total)\n"
@@ -91,13 +91,13 @@ object OperatorsDoc {
       "(`Entry.shufflePin`, enforced by `PlanAuditSpec`)\n"
     sb ++= s"- O(n*m)-plan allowlist: ${entries.count(_.planNote.isDefined)} entries " +
       "with written reasons (`Entry.planNote`)\n\n"
-    sb ++= "| entry | impl | oracle | tier | shuffle pin | plan note |\n"
-    sb ++= "|---|---|---|---|---|---|\n"
+    sb ++= "| entry | impl | tier | shuffle pin | plan note |\n"
+    sb ++= "|---|---|---|---|---|\n"
     entries.foreach { e =>
       val tier = if (e.heavy) "heavy-oracle" else "headline"
       val pin = e.shufflePin.map(_.toString).getOrElse("")
       val note = e.planNote.getOrElse("")
-      sb ++= s"| `${e.name}` | `${anchors(e.name)}` | duckdb | $tier | $pin | ${note.replace("|", "/")} |\n"
+      sb ++= s"| `${e.name}` | `${anchors(e.name)}` | $tier | $pin | ${note.replace("|", "/")} |\n"
     }
     sb.result()
   }

@@ -91,5 +91,4 @@ object Schemas {
   val requiredSongsColumns: Set[String] = songs.fieldNames.toSet
   /** Columns required of a users load (presence check P7). */
   val requiredUsersColumns: Set[String] = users.fieldNames.toSet
-  val requiredStreamsColumns: Set[String] = streams.fieldNames.toSet
 }

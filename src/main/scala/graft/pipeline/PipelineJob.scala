@@ -46,8 +46,7 @@ object PipelineJob {
       runTs: String = "1970-01-01T00:00:00",
       approxDistinct: Boolean = false,
       deskewTrending: Boolean = true,
-      dedupStagedStreams: Boolean = false,
-      bulkIngest: Boolean = false)
+      dedupStagedStreams: Boolean = false)
 
   final case class Result(stagedStreamRows: Long, kpiRows: Map[String, Long],
                           servedItems: Long)
@@ -113,18 +112,17 @@ object PipelineJob {
     ParquetIO.read(spark, staged)
   }
 
-  /** Validation job: permissive CSV → quarantine → clean → union, appended
-    * to the staged history (S6), which is returned. Row counts ride the
-    * write action via `observe()` — no second pass over the inputs just
-    * for logging (SURVEY §4.3: the reference re-runs count() eagerly at
-    * 8+ sites). The per-file parse caches are released once the append
-    * and the quarantine writes are done.
+  /** Validation job: one permissive scan over the stream CSVs →
+    * quarantine → clean, appended to the staged history (S6), which is
+    * returned. Row counts ride the write action via `observe()` — no
+    * second pass over the inputs just for logging (SURVEY §4.3: the
+    * reference re-runs count() eagerly at 8+ sites). The scan's cached
+    * parse is released once the append and the quarantine write are done.
     */
   private def stageStreams(spark: SparkSession, cfg: Config, obs: Observation): DataFrame = {
-    val (ingested, parses) =
-      Validator.ingestStreams(spark, cfg.streamFiles, cfg.quarantineDir, cfg.bulkIngest)
+    val (ingested, parse) = Validator.ingestStreams(spark, cfg.streamFiles, cfg.quarantineDir)
     try ParquetIO.writeAppend(ingested.observe(obs, rowCount), s"${cfg.stagingDir}/streams")
-    finally parses.foreach(_.unpersist())
+    finally parse.unpersist()
     ParquetIO.read(spark, s"${cfg.stagingDir}/streams")
   }
 

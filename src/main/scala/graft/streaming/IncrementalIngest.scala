@@ -5,11 +5,11 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, element_at, input_file_name, split}
+import org.apache.spark.sql.functions.{element_at, input_file_name, split}
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.io.{CsvSource, ParquetIO, PathUtil}
+import graft.model.Schemas
 import graft.validate.Validator
 
 /** Incremental file ingestion (S10) — the Spark-native replacement for
@@ -33,22 +33,14 @@ import graft.validate.Validator
 object IncrementalIngest {
 
   /** Open the streams CSV directory as an incremental source with the
-    * validation job's schema + permissive corrupt capture (S1 semantics).
+    * validation job's reader options, schema, permissive corrupt capture
+    * and header check (S1 semantics, `CsvSource.options`).
     */
   def streamsSource(spark: SparkSession, inputDir: String,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CsvSource.CorruptCol)
-      .option("delimiter", ",")
-      .option("quote", "\"")
-      .option("escape", "\\")
-      .option("multiLine", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .option("enableDateTimeParsingFallback", "false")
-      .schema(StructType(graft.model.Schemas.streams.fields :+
-        StructField(CsvSource.CorruptCol, StringType)))
+      .options(CsvSource.options(checkHeader = true))
+      .schema(CsvSource.permissiveSchema(Schemas.streams))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.csv(PathUtil.cleanPath(inputDir))
   }
@@ -75,11 +67,12 @@ object IncrementalIngest {
     * staging dir, then return the number of micro-batches executed.
     * Idempotent across re-runs via `checkpoint`.
     *
-    * Corrupt rows (S7): when `quarantineDir` is set, each micro-batch is
-    * split — rows whose raw line failed the schema parse are appended as
-    * JSON under `<quarantineDir>/corrupt_records/` with their source file
-    * (`scripts/validate_data.py:121-129` semantics, same as the batch
-    * `Validator` path); only clean rows reach staging.
+    * Corrupt rows (S7): each micro-batch goes through the batch ingest's
+    * own split, [[graft.validate.Validator.splitStreams]] — with
+    * `quarantineDir` set, rows whose raw line failed the schema parse are
+    * appended as JSON under `<quarantineDir>/corrupt_records/` with their
+    * `_source_file` (`scripts/validate_data.py:121-129` semantics); only
+    * clean rows reach staging.
     *
     * Ledger migration: `processedLedger` points at a reference-style
     * `processed_streams.json`; files it records as completed are excluded
@@ -115,20 +108,8 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches.incrementAndGet()
-        // stamp provenance BEFORE the cache boundary — input_file_name()
-        // evaluates to "" once rows are served from cached partitions
-        val raw = batch.withColumn("_source_file", input_file_name())
-          .persist() // one parse pass serves both branches
-        try {
-          quarantineDir.foreach { qd =>
-            ParquetIO.quarantineJson(
-              raw.filter(col(CsvSource.CorruptCol).isNotNull), qd)
-          }
-          val cleaned = raw.filter(col(CsvSource.CorruptCol).isNull)
-            .drop(CsvSource.CorruptCol, "_source_file")
-            .transform(Validator.cleanStreams)
-          ParquetIO.writeAppend(cleaned, staging)
-        } finally raw.unpersist()
+        val (clean, parse) = Validator.splitStreams(batch, quarantineDir)
+        try ParquetIO.writeAppend(clean, staging) finally parse.unpersist()
       }
       .start()
     q.awaitTermination()

@@ -8,21 +8,21 @@ import graft.model.Schemas
 
 /** The validation/ingest job — the reference's most-executed code path
   * (`scripts/validate_data.py`): permissive CSV scan, corrupt-record
-  * quarantine, column-presence validation, cast + null-reject cleaning,
+  * quarantine, header validation, cast + null-reject cleaning,
   * multi-file union, and reference-data dispatch.
   *
-  * Scale notes: each input file is an independent scan task set (no
-  * shuffle anywhere in this job — union is a plan-level concat, cleaning
-  * is per-row). The only materialization is the cached single parse pass
-  * per file that serves both the quarantine and the clean branch, instead
-  * of the reference's double read+count.
+  * Scale notes: the stream files are read by one multi-path scan, a
+  * single task set however many files there are, where the reference
+  * loops over the files (no shuffle anywhere in this job: cleaning is
+  * per-row). The only materialization is that scan's cached parse, which
+  * serves both the quarantine and the clean branch ([[splitStreams]]),
+  * instead of the reference's double read+count.
   */
 object Validator {
 
-  /** P7 — column-presence assertion (`scripts/validate_data.py:58-70`). */
-  def validateColumns(df: DataFrame, required: Set[String], context: String): Unit =
-    validateColumnSet(df.columns.toSet, required, context)
-
+  /** P7 — column-presence assertion (`scripts/validate_data.py:58-70`),
+    * over a file's header names.
+    */
   def validateColumnSet(actual: Set[String], required: Set[String], context: String): Unit = {
     val missing = required -- actual
     require(missing.isEmpty,
@@ -87,61 +87,49 @@ object Validator {
       .na.drop()
 
   /** S1+S7+P7+P3+P5+U1 — the full streams ingest
-    * (`scripts/validate_data.py:91-158`): per file, one cached permissive
-    * parse serving quarantine (JSON append) and the clean branch
-    * (validate, cast, na.drop); then a union-all fold across files.
-    * `paths` elements may be comma-separated lists.
+    * (`scripts/validate_data.py:91-158`): one permissive scan over every
+    * file, split by [[splitStreams]] into the quarantine (JSON append)
+    * and the clean rows (cast, na.drop). `paths` elements may be
+    * comma-separated lists.
     */
   def processStreams(spark: SparkSession, paths: Seq[String],
                      quarantinePath: Option[String] = None): DataFrame =
-    ingestStreams(spark, paths, quarantinePath, bulk = false)._1
+    ingestStreams(spark, paths, quarantinePath)._1
 
-  /** Scale path for [[processStreams]]: ONE permissive scan over the
-    * whole file list instead of a per-file driver loop — at 10^4+ input
-    * files the loop means 10^4 cached frames and job submissions, while
-    * a multi-path scan is a single task set. Quarantined rows keep their
-    * provenance via `input_file_name()`. Row-identical to the per-file
-    * fold (same parse, same cleaning); the per-file variant remains for
-    * reference-parity quarantine granularity.
-    */
-  def processStreamsBulk(spark: SparkSession, paths: Seq[String],
-                         quarantinePath: Option[String] = None): DataFrame =
-    ingestStreams(spark, paths, quarantinePath, bulk = true)._1
-
-  /** [[processStreams]] (or, with `bulk`, [[processStreamsBulk]]) that
-    * also returns the cached parses behind its result. The quarantine
-    * writes have run when it returns; once the result is consumed too,
-    * the caller should `unpersist` the parses, which a long-lived session
-    * would otherwise keep, one per file per call.
+  /** [[processStreams]] that also returns the cached parse behind its
+    * result. The quarantine write has run when it returns; once the result
+    * is consumed too, the caller should `unpersist` the parse, which a
+    * long-lived session would otherwise keep, one per call.
+    *
+    * Each file's header must name the streams columns in order: a
+    * renamed, missing or reordered column fails the scan, naming the
+    * column and the file (see `CsvSource.options`).
     */
   def ingestStreams(spark: SparkSession, paths: Seq[String],
-                    quarantinePath: Option[String],
-                    bulk: Boolean): (DataFrame, Seq[DataFrame]) = {
+                    quarantinePath: Option[String]): (DataFrame, DataFrame) = {
     val files = paths.flatMap(PathUtil.splitPaths)
     require(files.nonEmpty, "no stream files given")
-    val parsed = (if (bulk) Seq(files) else files.map(Seq(_))).map { batch =>
-      val (raw, clean, corrupt) =
-        if (bulk) bulkSplitCached(spark, batch)
-        else CsvSource.readSplitCached(spark, Schemas.streams, batch)
-      quarantinePath.foreach(ParquetIO.quarantineJson(corrupt, _))
-      validateColumns(clean, Schemas.requiredStreamsColumns,
-        if (bulk) s"streams files: ${batch.size}" else s"streams file: ${batch.head}")
-      (cleanStreams(clean), raw)
-    }
-    (parsed.map(_._1).reduce(_ unionAll _), parsed.map(_._2))
+    splitStreams(CsvSource.readPermissive(spark, Schemas.streams, files, checkHeader = true),
+      quarantinePath)
   }
 
-  /** The bulk path's cached parse, with each row's `_source_file` taken
-    * inside the parse: over a cached relation `input_file_name()` reads
-    * `""`, so it must be evaluated by the scan, before `.cache()`. The
-    * clean side drops the column again (the per-file fold has none).
+  /** The one streams split, shared by the batch ingest and each
+    * micro-batch of `graft.streaming.IncrementalIngest`: stamp every row
+    * of the permissive parse `raw` with its `_source_file`, cache it,
+    * append its corrupt rows to the quarantine under `quarantinePath`,
+    * and return (the [[cleanStreams]] rows, the cached parse). The caller
+    * releases the parse once the clean rows are consumed; if the
+    * quarantine write fails it is released here.
+    *
+    * The stamp is taken before the cache: over a cached relation
+    * `input_file_name()` reads `""`, so it must be evaluated by the scan.
     */
-  private def bulkSplitCached(spark: SparkSession,
-                              paths: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
-    val raw = CsvSource.readPermissive(spark, Schemas.streams, paths)
-      .withColumn("_source_file", input_file_name()).cache()
-    (raw, CsvSource.cleanRows(raw).drop("_source_file"),
-      raw.filter(col(CsvSource.CorruptCol).isNotNull))
+  def splitStreams(raw: DataFrame, quarantinePath: Option[String]): (DataFrame, DataFrame) = {
+    val parse = raw.withColumn("_source_file", input_file_name()).cache()
+    try quarantinePath.foreach(
+      ParquetIO.quarantineJson(parse.filter(col(CsvSource.CorruptCol).isNotNull), _))
+    catch { case e: Throwable => parse.unpersist(); throw e }
+    (cleanStreams(CsvSource.cleanRows(parse)), parse)
   }
 
   /** Idempotency guard for the append-mode staging boundary (SURVEY
@@ -156,15 +144,13 @@ object Validator {
     staged.dropDuplicates(Seq("user_id", "track_id", "listen_time"))
 
   /** Reference-data ingest with content-based dispatch
-    * (`scripts/validate_data.py:219-249`): a frame containing `track_id`
-    * is songs, else one containing `user_id` is users. Schemas are
-    * declared (SURVEY §1.3); pass `inferSchema=true` for the reference's
-    * inference-compatibility mode. The declared-schema result is served
-    * from a cached parse, so it may be counted and reused.
+    * (`scripts/validate_data.py:219-249`): a file whose header names
+    * `track_id` is songs, else users. Schemas are declared (SURVEY §1.3),
+    * not inferred. The result is served from a cached parse, so it may be
+    * counted and reused.
     */
-  def processReferenceData(spark: SparkSession, path: String,
-                           inferSchema: Boolean = false): DataFrame =
-    referenceData(spark, path, inferSchema, cached = true)
+  def processReferenceData(spark: SparkSession, path: String): DataFrame =
+    referenceData(spark, path, cached = true)
 
   /** Stage a reference CSV: the same header check and dispatch as
     * [[processReferenceData]], written as parquet (overwrite) to
@@ -173,35 +159,22 @@ object Validator {
     * staged parquet back.
     */
   def stageReferenceData(spark: SparkSession, path: String, stagedPath: String): Unit =
-    ParquetIO.writeOverwrite(referenceData(spark, path, inferSchema = false, cached = false),
-      stagedPath)
+    ParquetIO.writeOverwrite(referenceData(spark, path, cached = false), stagedPath)
 
-  private def referenceData(spark: SparkSession, path: String, inferSchema: Boolean,
-                            cached: Boolean): DataFrame = {
-    val raw =
-      if (inferSchema) CsvSource.readInferred(spark, Seq(path))
-      else {
-        // Probe the header to pick the declared schema, mirroring the
-        // reference's content dispatch without paying an inference pass
-        // (header-only read: no inferSchema, so Spark reads one line).
-        // The presence check runs against the FILE's header — a declared
-        // read schema would mask missing columns with all-null fields.
-        val header = spark.read.option("header", "true")
-          .csv(PathUtil.cleanPath(path)).schema.fieldNames.toSet
-        val (schema, required, ctx) =
-          if (header.contains("track_id")) (Schemas.songs, Schemas.requiredSongsColumns, "songs")
-          else (Schemas.users, Schemas.requiredUsersColumns, "users")
-        validateColumnSet(header, required, ctx)
-        if (cached) CsvSource.readSplit(spark, schema, Seq(path))._1
-        else CsvSource.cleanRows(CsvSource.readPermissive(spark, schema, Seq(path)))
-      }
-    if (raw.columns.contains("track_id")) {
-      validateColumns(raw, Schemas.requiredSongsColumns, "songs")
-      raw.select(Schemas.songs.fieldNames.map(col).toSeq: _*)
-    } else {
-      validateColumns(raw, Schemas.requiredUsersColumns, "users")
-      raw.select(Schemas.users.fieldNames.map(col).toSeq: _*)
-    }
+  private def referenceData(spark: SparkSession, path: String, cached: Boolean): DataFrame = {
+    // Probe the header to pick the declared schema, mirroring the
+    // reference's content dispatch without paying an inference pass
+    // (header-only read: no inferSchema, so Spark reads one line).
+    // The presence check runs against the FILE's header — a declared
+    // read schema would mask missing columns with all-null fields.
+    val header = spark.read.option("header", "true")
+      .csv(PathUtil.cleanPath(path)).schema.fieldNames.toSet
+    val (schema, required, ctx) =
+      if (header.contains("track_id")) (Schemas.songs, Schemas.requiredSongsColumns, "songs")
+      else (Schemas.users, Schemas.requiredUsersColumns, "users")
+    validateColumnSet(header, required, ctx)
+    if (cached) CsvSource.readSplit(spark, schema, Seq(path))._1
+    else CsvSource.cleanRows(CsvSource.readPermissive(spark, schema, Seq(path)))
   }
 
   /** Schema-evolution union: fold frames written under DIFFERENT

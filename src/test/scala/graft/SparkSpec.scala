@@ -17,4 +17,10 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SharedSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The messages of `e` and its causes: a failed task's own error
+    * reaches the driver wrapped in Spark's job and file-read errors.
+    */
+  def causeMessages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 }

@@ -111,15 +111,14 @@ class PipelineSpec extends SparkSpec {
     (compiled.getCount - before) shouldBe 0L
   }
 
-  private def fixtureConfig(base: String, bulk: Boolean = false) = PipelineJob.Config(
+  private def fixtureConfig(base: String) = PipelineJob.Config(
     streamFiles = Seq(s"$fixtures/streams_a.csv", s"$fixtures/streams_b.csv"),
     songsCsv = s"$fixtures/songs.csv",
     usersCsv = s"$fixtures/users.csv",
     stagingDir = s"$base/staging",
     outputDir = s"$base/out",
     quarantineDir = Some(s"$base/quarantine"),
-    runTs = "2024-07-01T00:00:00",
-    bulkIngest = bulk)
+    runTs = "2024-07-01T00:00:00")
 
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -145,16 +144,29 @@ class PipelineSpec extends SparkSpec {
 
   test("a run releases every cache it made: stream parses and the enrichment") {
     spark.catalog.clearCache()
-    for (bulk <- Seq(false, true)) {
-      val before = persistedRdds
-      PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cache"), bulk),
-        Some(new KpiSink.InMemoryKvStore()))
-      withClue(s"bulkIngest=$bulk: ") {
-        spark.sharedState.cacheManager.isEmpty shouldBe true
-        (persistedRdds -- before) shouldBe empty
-      }
-    }
+    val before = persistedRdds
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cache")), Some(new KpiSink.InMemoryKvStore()))
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    (persistedRdds -- before) shouldBe empty
     branchThreadsAlive shouldBe false
+  }
+
+  test("a stream file with a renamed column fails the run, naming it and the file") {
+    val base = tmpDir("pipe_header")
+    val renamed = s"$base/renamed.csv"
+    Files.writeString(Paths.get(renamed), "user_id,song_id,listen_time\nu1,t1,2024-06-25 10:00:00\n")
+    spark.catalog.clearCache()
+    val before = persistedRdds
+    val e = intercept[Exception] {
+      PipelineJob.run(spark, fixtureConfig(base).copy(
+        streamFiles = Seq(s"$fixtures/streams_a.csv", renamed)))
+    }
+    val msg = causeMessages(e)
+    msg should include("song_id")
+    msg should include("renamed.csv")
+    new java.io.File(s"$base/staging/streams").exists() shouldBe false
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    (persistedRdds -- before) shouldBe empty
   }
 
   test("concurrent run equals the KPI queries and item projections run one at a time") {

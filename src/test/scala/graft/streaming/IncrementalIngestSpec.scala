@@ -2,13 +2,20 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, element_at, split}
+
 import graft.SparkSpec
+import graft.io.CsvSource
+import graft.validate.Validator
 
 /** Batch-parity proof for incremental ingest: a second run processes
   * ONLY files that arrived after the first (the reference's
   * processed-files-ledger contract).
   */
 class IncrementalIngestSpec extends SparkSpec {
+
+  private val fixtures = graft.SparkEntry.FixturesDir
 
   private def writeCsv(path: String, rows: Seq[String]): Unit =
     Files.writeString(Paths.get(path),
@@ -76,6 +83,40 @@ class IncrementalIngestSpec extends SparkSpec {
     IncrementalIngest.runAvailableNow(spark, in, staging, ckpt, Some(quar))
     spark.read.parquet(staging).count() shouldBe 2
     spark.read.json(s"$quar/corrupt_records").count() shouldBe 1
+  }
+
+  test("batch and streaming ingest stage and quarantine the same rows") {
+    val base = tmpDir("incrparity")
+    val in = s"$base/in"; new java.io.File(in).mkdirs()
+    val files = Seq("streams_a.csv", "streams_b.csv")
+    files.foreach(f => Files.copy(Paths.get(s"$fixtures/$f"), Paths.get(s"$in/$f")))
+    val (q1, q2) = (s"$base/q_batch", s"$base/q_stream")
+    val batch = Validator.processStreams(spark, files.map(f => s"$in/$f"), Some(q1))
+    IncrementalIngest.runAvailableNow(spark, in, s"$base/staging", s"$base/ckpt", Some(q2))
+
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    rows(spark.read.parquet(s"$base/staging")) shouldBe rows(batch)
+    // the quarantine's `_corrupt_record` field is data here, not the JSON
+    // reader's own corrupt-record column; the source file by base name
+    def quarantined(dir: String) = rows(spark.read
+      .option("columnNameOfCorruptRecord", "_unparsed_json").json(s"$dir/corrupt_records")
+      .select(col(CsvSource.CorruptCol), element_at(split(col("_source_file"), "/"), -1)))
+    val q = quarantined(q1)
+    q.map(_(1).toString).distinct.sorted shouldBe files
+    quarantined(q2) shouldBe q
+  }
+
+  test("a stream file with a renamed column fails the streaming run, naming it") {
+    val base = tmpDir("incrheader")
+    val in = s"$base/in"; new java.io.File(in).mkdirs()
+    Files.writeString(Paths.get(s"$in/renamed.csv"),
+      "user_id,song_id,listen_time\nu1,t1,2024-06-25 10:00:00\n")
+    val e = intercept[Exception] {
+      IncrementalIngest.runAvailableNow(spark, in, s"$base/staging", s"$base/ckpt")
+    }
+    val msg = causeMessages(e)
+    msg should include("song_id")
+    msg should include("renamed.csv")
   }
 
   test("a pre-existing processed ledger is honored: ledgered files are not reprocessed") {

@@ -40,14 +40,13 @@ class ValidatorSpec extends SparkSpec {
     q.count() shouldBe 3
   }
 
-  test("validateColumns raises on missing columns, names them") {
-    val df = spark.range(1).select(col("id").as("user_id"))
+  test("validateColumnSet raises on missing columns, names them") {
     val e = intercept[IllegalArgumentException] {
-      Validator.validateColumns(df, Set("user_id", "track_id"), "ctx")
+      Validator.validateColumnSet(Set("user_id"), Set("user_id", "track_id"), "ctx")
     }
     e.getMessage should include("track_id")
     e.getMessage should include("ctx")
-    Validator.validateColumns(df, Set("user_id"), "ok") // no throw
+    Validator.validateColumnSet(Set("user_id"), Set("user_id"), "ok") // no throw
   }
 
   test("processReferenceData dispatches songs vs users by columns") {
@@ -59,11 +58,6 @@ class ValidatorSpec extends SparkSpec {
     // 30 valid + null-aged row survive; uncastable age and bad date rows are corrupt
     users.count() shouldBe 31
     users.filter(col("user_age").isNull).count() shouldBe 1
-  }
-
-  test("processReferenceData inference mode matches declared-schema rows") {
-    val inferred = Validator.processReferenceData(spark, s"$fixtures/songs.csv", inferSchema = true)
-    inferred.count() shouldBe 26
   }
 
   test("cleanStreams casts and rejects any-null rows") {
@@ -80,23 +74,15 @@ class ValidatorSpec extends SparkSpec {
     out.schema.map(_.dataType.typeName) shouldBe Seq("string", "string", "timestamp")
   }
 
-  test("processStreamsBulk is row-identical to the per-file fold") {
-    val perFile = Validator.processStreams(spark,
-      Seq(s"$fixtures/streams_a.csv", s"$fixtures/streams_b.csv"))
-      .collect().map(_.toSeq).toSet
-    val bulk = Validator.processStreamsBulk(spark,
-      Seq(s"$fixtures/streams_a.csv,$fixtures/streams_b.csv"))
-      .collect().map(_.toSeq).toSet
-    bulk shouldBe perFile
-
-    val q = tmpDir("bulkq")
-    Validator.processStreamsBulk(spark, Seq(s"$fixtures/streams_a.csv"), Some(q))
+  test("processStreams quarantines each corrupt row with its source file") {
+    val q = tmpDir("provq")
+    Validator.processStreams(spark, Seq(s"$fixtures/streams_a.csv"), Some(q))
     val quarantined = spark.read.json(s"$q/corrupt_records")
     quarantined.count() shouldBe 3
     quarantined.columns should contain("_source_file")
 
-    // provenance: each bulk-quarantined row names the file that the
-    // per-file path quarantines it from
+    // provenance: each row quarantined from both files at once names the
+    // file that a single-file call quarantines it from
     val files = Seq("streams_a.csv", "streams_b.csv")
     // the quarantine's `_corrupt_record` field is data here, not the
     // JSON reader's own corrupt-record column
@@ -107,8 +93,8 @@ class ValidatorSpec extends SparkSpec {
       Validator.processStreams(spark, Seq(s"$fixtures/$f"), Some(dir))
       readQuarantine(dir).select(CsvSource.CorruptCol).collect().map(_.getString(0) -> f)
     }.toMap
-    val both = tmpDir("bulkq2")
-    Validator.processStreamsBulk(spark, files.map(f => s"$fixtures/$f"), Some(both))
+    val both = tmpDir("provq2")
+    Validator.processStreams(spark, files.map(f => s"$fixtures/$f"), Some(both))
     val rows = readQuarantine(both).select(CsvSource.CorruptCol, "_source_file").collect()
       .map(r => r.getString(0) -> r.getString(1))
     rows.length shouldBe origin.size
@@ -126,11 +112,30 @@ class ValidatorSpec extends SparkSpec {
     val dir = tmpDir("badcsv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b.csv"),
       "only_one_column\nx\n")
-    // declared streams schema maps the single header to user_id; the
-    // validator's column check passes (schema is declared) but the rows
-    // are null-padded and dropped — loud emptiness, not silent garbage
-    val out = Validator.processStreams(spark, Seq(s"$dir/b.csv"))
-    out.count() shouldBe 0
+    // the header is checked against the streams columns inside the scan
+    val e = intercept[Exception] {
+      Validator.processStreams(spark, Seq(s"$dir/b.csv")).count()
+    }
+    causeMessages(e) should include("b.csv")
+  }
+
+  test("processStreams reads stream headers by name, naming the column and the file") {
+    val dir = tmpDir("renamedcsv")
+    val good = s"$fixtures/streams_b.csv"
+    for ((name, header) <- Seq("renamed" -> "user_id,song_id,listen_time",
+                               "reordered" -> "track_id,user_id,listen_time")) {
+      val f = s"$dir/$name.csv"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
+        s"$header\nu1,t1,2024-06-25 10:00:00\n")
+      withClue(s"$name header: ") {
+        val e = intercept[Exception] {
+          Validator.processStreams(spark, Seq(good, f), Some(s"$dir/q_$name"))
+        }
+        val msg = causeMessages(e)
+        msg should include("track_id")
+        msg should include(s"$name.csv")
+      }
+    }
   }
 
   test("processReferenceData: unrecognized header fails the column check") {
