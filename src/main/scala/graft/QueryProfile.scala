@@ -219,28 +219,36 @@ object QueryProfile {
     *
     * Detection: walk the plan INCLUDING subquery plans, canonicalize every
     * subtree, and count how many times each canonical form containing at
-    * least one parquet scan appears, skipping subtrees under ReusedExchange
-    * (those are free). Reports the max duplicate count and the table names of
-    * the duplicated scans; None when nothing repeats.
+    * least one parquet scan is evaluated, skipping subtrees under
+    * ReusedExchange (those are free). A scan counts when it sits behind an
+    * AQE query stage or a reused exchange, so work repeated above a reused
+    * stage is seen. In a final adaptive plan, copies inside one query stage
+    * count as one evaluation: they run in that stage's job over the same
+    * stage inputs, as a self-union reading one reused exchange does. Copies
+    * in two stages are the work run twice. Reports the max duplicate count
+    * and the table names of the duplicated scans; None when nothing repeats.
     */
   def duplicateSubtree(plan: SparkPlan): Option[String] = {
-    val all = mutable.Buffer[SparkPlan]()
-    walk(plan, all, mutable.Set[Int]())
+    val all = mutable.Buffer[(SparkPlan, Option[Int])]()
+    walk(plan, None, all, mutable.Set[Int]())
     // count canonical forms of subtrees that contain a scan AND at least
     // one exchange or aggregate (i.e. real work, not a bare column prune)
-    val interesting = all.filter { st =>
+    val interesting = all.filter { case (st, _) =>
       scanTables(st).nonEmpty &&
         st.collect { case e: Exchange => e
                      case a: BaseAggregateExec => a }.nonEmpty
     }
-    val byCanon = interesting.groupBy(_.canonicalized)
-    val dups = byCanon.filter(_._2.size > 1)
+    // a copy outside any query stage is its own evaluation
+    def evaluations(copies: Seq[(SparkPlan, Option[Int])]): Int =
+      copies.count(_._2.isEmpty) + copies.flatMap(_._2).distinct.size
+    val dups = interesting.toSeq.groupBy(_._1.canonicalized).view
+      .mapValues(evaluations).filter(_._2 > 1).toMap
     if (dups.isEmpty) None
     else {
       // deepest duplicated subtree (the real cost), its count, its tables
-      val (canon, occ) = dups.maxBy { case (c, _) => c.collect { case x => x }.size }
+      val (canon, n) = dups.maxBy { case (c, _) => c.collect { case x => x }.size }
       val size = canon.collect { case x => x }.size
-      Some(s"${occ.size}x duplicated subtree of $size nodes over " +
+      Some(s"${n}x duplicated subtree of $size nodes over " +
         s"tables=${scanTables(canon).distinct.mkString(",")} " +
         s"(total dup groups: ${dups.size})")
     }
@@ -252,29 +260,34 @@ object QueryProfile {
       case e: InSubqueryExec => e.plan
     })
 
-  /** All evaluated subtrees: children of every node + roots of subqueries,
-    * not descending into ReusedExchange (its child is shared, not re-run)
-    * and visiting each AQE query stage ONCE (AQE represents stage reuse as
-    * repeated QueryStageExec nodes with the same id, not ReusedExchange).
+  /** All evaluated subtrees, each with the AQE query stage it runs in:
+    * children of every node + roots of subqueries, not descending into
+    * ReusedExchange (its child is shared, not re-run) and visiting each
+    * AQE query stage ONCE (AQE represents stage reuse as repeated
+    * QueryStageExec nodes with the same id, not ReusedExchange).
     */
-  private def walk(p: SparkPlan, acc: mutable.Buffer[SparkPlan],
+  private def walk(p: SparkPlan, stage: Option[Int],
+                   acc: mutable.Buffer[(SparkPlan, Option[Int])],
                    seenStages: mutable.Set[Int]): Unit = {
     p match {
       case _: ReusedExchangeExec => // shared — not a second evaluation
       case a: AdaptiveSparkPlanExec =>
-        walk(a.executedPlan, acc, seenStages)
+        walk(a.executedPlan, stage, acc, seenStages)
       case q: QueryStageExec =>
-        if (seenStages.add(q.id)) walk(q.plan, acc, seenStages)
+        if (seenStages.add(q.id)) walk(q.plan, Some(q.id), acc, seenStages)
       case other =>
-        acc += other
-        other.children.foreach(walk(_, acc, seenStages))
-        subqueryPlans(other).foreach(walk(_, acc, seenStages))
+        acc += other -> stage
+        other.children.foreach(walk(_, stage, acc, seenStages))
+        subqueryPlans(other).foreach(walk(_, stage, acc, seenStages))
     }
   }
 
-  private def scanTables(p: SparkPlan): Seq[String] = p.collect {
+  private def scanTables(p: SparkPlan): Seq[String] = p.flatMap {
     case f: FileSourceScanExec =>
-      f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?")
+      Seq(f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?"))
+    case q: QueryStageExec => scanTables(q.plan)
+    case r: ReusedExchangeExec => scanTables(r.child)
+    case _ => Nil
   }
 
   def main(args: Array[String]): Unit = {

@@ -89,17 +89,6 @@ object FsUtil {
     try out.write(md5.getBytes("UTF-8")) finally out.close()
   }
 
-  /** S11, single-shot form: check AND advance the ledger in one call.
-    * Only safe when there is no downstream write to gate (the original
-    * reference shape); pipelines should use the split
-    * [[checksumIfChanged]]/[[recordChecksum]] pair instead.
-    */
-  def contentChanged(spark: SparkSession, input: String, ledgerPath: String): Boolean = {
-    val changed = checksumIfChanged(spark, input, ledgerPath)
-    changed.foreach(recordChecksum(spark, ledgerPath, _))
-    changed.isDefined
-  }
-
   /** S12 — archival move (`dags/music_streaming_pipeline.py:722-813`):
     * copy each processed object to `<archiveRoot>/<runTs>/<kind>/<name>`
     * then delete the original. Returns the archived target paths.

@@ -107,7 +107,6 @@ object Bpe {
   def train(docs: DataFrame, textCol: String, numMerges: Int,
             minCount: Long = 2L): Seq[(String, String)] = {
     require(numMerges >= 1, "numMerges must be positive")
-    val spark = docs.sparkSession
 
     // `anchor` is always the ROOT checkpoint frame (what Checkpoints.free
     // can release); `words` may be a replace-chain DERIVED from it between

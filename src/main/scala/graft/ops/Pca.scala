@@ -61,7 +61,7 @@ object Pca {
     * swap (measured at fair 100× in PERF.md r10).
     */
   private def dimSums(slots: DataFrame, cells: Int,
-                      ordered: Boolean = true): DataFrame =
+                      ordered: Boolean): DataFrame =
     if (!ordered)
       slots.groupBy(col("_j")).agg(sum(col("_t")).as("total"))
     else slots

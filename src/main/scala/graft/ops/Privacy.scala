@@ -133,10 +133,9 @@ object Privacy {
     * (r11 advice): two releases of the same category under one seed
     * draw the identical noise value, so their difference is the exact
     * count delta — folding a per-release salt (a date, a window start)
-    * into the noise key restores fresh noise per release.
-    * [[graft.streaming.StreamingPrivacy.stableHistogramStream]] salts
-    * with the window start; pass the same value here for bit-for-bit
-    * convergence. Empty (the default) preserves the single-release key.
+    * into the noise key restores fresh noise per release; a windowed
+    * release salts with its window start. Empty (the default) preserves
+    * the single-release key.
     *
     * Scale posture: distinct + one window on the unit axis + one
     * category agg — shuffles on unit then category, both map-side

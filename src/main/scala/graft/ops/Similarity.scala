@@ -32,14 +32,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine with pre-materialized norms: on an n×m pair join, each side's
-    * norm is computed once per VECTOR (before the join) instead of once
-    * per PAIR — same doubles bit-for-bit (`dot/(na*nb)` either way), 3×
-    * fewer array folds in the pair kernel.
-    */
-  def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
-    dot(a, b) / (na * nb)
-
   /** Exact cosine top-k per query vector. Queries must be small enough to
     * broadcast (they are, by construction of a query workload); the
     * corpus is scanned once, map-side, and only (queries × k) rows reach

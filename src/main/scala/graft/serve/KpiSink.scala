@@ -2,8 +2,6 @@ package graft.serve
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Distributed key-value serving sink (S8) — the engine-side replacement

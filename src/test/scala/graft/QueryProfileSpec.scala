@@ -41,6 +41,16 @@ class QueryProfileSpec extends SparkSpec {
     QueryProfile.duplicateSubtree(union.queryExecution.executedPlan) shouldBe empty
   }
 
+  test("duplicate-subtree check flags work repeated above a reused stage") {
+    val agg = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count()
+    val union = agg.repartition(3).union(agg.repartition(5))
+    union.collect()
+    // AQE ran the aggregate's exchange once and reused it, but the final
+    // aggregate over it ran in two stages, one per repartition
+    QueryProfile.duplicateSubtree(union.queryExecution.executedPlan) shouldBe defined
+  }
+
   test("profile leaves no cached frame, persisted RDD or listener behind") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()

@@ -124,7 +124,6 @@ class GraftExtensionsSpec extends SparkSpec {
     "")
 
   test("readability macro in SQL is bit-equal to TextAnalysis.readability") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = auditFixtures.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")

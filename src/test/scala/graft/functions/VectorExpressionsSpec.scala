@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Similarity}
+import graft.ops.Dedup
 
 /** Bit-identity guarantees: the codegen'd kernels must produce EXACTLY
   * the doubles/longs of the declarative HOF reference implementations

@@ -27,6 +27,7 @@ class IoSpec extends SparkSpec {
     // partition filter prunes to a single directory
     val plan = ParquetIO.read(spark, dir).filter(col("date") === "2024-06-25")
       .queryExecution.executedPlan.toString
+    plan should include ("PartitionFilters: [isnotnull(date")
     ParquetIO.read(spark, dir).filter(col("date") === "2024-06-25").count() shouldBe 2
   }
 
@@ -56,7 +57,6 @@ class IoSpec extends SparkSpec {
   }
 
   test("two co-bucketed tables join without any shuffle") {
-    import org.apache.spark.sql.functions._
     val facts = (1 to 500).map(i => (s"u${i % 40}", i)).toDF("user_id", "v")
     val dims  = (1 to 40).map(i => (s"u$i", s"name$i")).toDF("user_id", "name")
     ParquetIO.writeBucketed(facts, "facts_b", Seq("user_id"), 8)
@@ -81,16 +81,21 @@ class IoSpec extends SparkSpec {
     FsUtil.exists(spark, s"$base/nope") shouldBe false
   }
 
-  test("FsUtil.contentChanged gates on MD5 like the reference CDC check") {
+  test("FsUtil.checksumIfChanged gates on MD5 like the reference CDC check") {
     val base = tmpDir("cdc")
     val f = s"$base/songs.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(f), "a,b\n1,2\n")
     val ledger = s"$base/ledger.md5"
-    FsUtil.contentChanged(spark, f, ledger) shouldBe true  // first sight
-    FsUtil.contentChanged(spark, f, ledger) shouldBe false // unchanged
+    def changed(): Boolean = {
+      val pending = FsUtil.checksumIfChanged(spark, f, ledger)
+      pending.foreach(FsUtil.recordChecksum(spark, ledger, _))
+      pending.isDefined
+    }
+    changed() shouldBe true  // first sight
+    changed() shouldBe false // unchanged
     java.nio.file.Files.writeString(java.nio.file.Paths.get(f), "a,b\n1,3\n")
-    FsUtil.contentChanged(spark, f, ledger) shouldBe true  // edited
-    FsUtil.contentChanged(spark, f, ledger) shouldBe false
+    changed() shouldBe true  // edited
+    changed() shouldBe false
   }
 
   test("FsUtil split CDC: checksumChanged is read-only, ledger advances only on commitChecksum") {
@@ -142,25 +147,5 @@ class IoSpec extends SparkSpec {
       CsvSource.readSplit(spark, graft.model.Schemas.streams, Seq(f))
     clean.count() shouldBe 1
     corrupt.count() shouldBe 1
-  }
-
-  test("ColumnarIO: ORC round-trip, partitioned layout, filters reach the scan") {
-    val dir = tmpDir("orc") + "/t"
-    val df = (1 to 100).map(i => (i.toLong, s"g${i % 4}", i * 1.5))
-      .toDF("k", "g", "v")
-    ColumnarIO.writeOrcOverwrite(df, dir, partitionBy = Seq("g"))
-    val back = ColumnarIO.readOrc(spark, dir)
-    back.count() shouldBe 100
-    back.schema.fieldNames.toSet shouldBe Set("k", "g", "v")
-    // partition pruning: only one directory read for a partition filter
-    back.filter(org.apache.spark.sql.functions.col("g") === "g1")
-      .count() shouldBe 25
-    // predicate pushdown must reach the ORC scan, not just post-filter
-    val plan = back.filter(org.apache.spark.sql.functions.col("k") > 90L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(k), GreaterThan(k,90)]"),
-      s"ORC scan lost the pushed filter:\n$plan")
-    ColumnarIO.writeOrcAppend(df, dir, partitionBy = Seq("g"))
-    ColumnarIO.readOrc(spark, dir).count() shouldBe 200
   }
 }

@@ -1,8 +1,5 @@
 package graft.kpi
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,8 +11,6 @@ import graft.SparkSpec
   */
 class KpiGoldenSpec extends SparkSpec {
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
 
   private lazy val streams = Seq(
     ("u1", "t1", "2024-06-25 00:00:00"),

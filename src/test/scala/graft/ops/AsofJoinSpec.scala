@@ -1,15 +1,11 @@
 package graft.ops
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class AsofJoinSpec extends SparkSpec {
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
 
   private lazy val trades = Seq(
     (1L, "A", "2024-06-25 10:00:00"),

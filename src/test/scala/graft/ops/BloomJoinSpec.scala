@@ -6,7 +6,6 @@ import graft.SparkSpec
 import graft.functions.BloomExpressions
 
 class BloomJoinSpec extends SparkSpec {
-  import spark.implicits._
 
   test("no false negatives ever: every inserted key tests positive") {
     val k = BloomExpressions.numHashes(10)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
   import spark.implicits._

@@ -82,7 +82,7 @@ class EvalMetricsSpec extends SparkSpec {
   }
 
   test("decayTrend halves each prior day's weight and caps the window") {
-    val ts = Seq.tabulate(4)(_ => ()) // counts 4, 2, 8 over three days
+    // counts 4, 2, 8 over three days
     val rows =
       Seq.fill(4)(("k", "2024-01-01 10:00:00")) ++
       Seq.fill(2)(("k", "2024-01-02 10:00:00")) ++

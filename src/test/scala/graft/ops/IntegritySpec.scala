@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
 
 class IntegritySpec extends SparkSpec {
   import spark.implicits._

@@ -403,7 +403,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("assignToCentroids: argmax cosine, ties to lower index, map-side") {
-    import org.apache.spark.sql.functions._
     val vecs = Seq(
       (1L, Seq(1.0f, 0.0f)),   // on centroid 0
       (2L, Seq(0.0f, 2.0f)),   // on centroid 1 (norm-invariant)

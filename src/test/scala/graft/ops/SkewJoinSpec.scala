@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SkewJoinSpec extends SparkSpec {
-  import spark.implicits._
 
   // one pathological key carrying 90% of the rows
   private lazy val skewed = spark.range(0, 10000).select(

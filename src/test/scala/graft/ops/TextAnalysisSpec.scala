@@ -815,7 +815,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("filterFunnel conserves mass and bills docs to their first rule") {
-    import org.apache.spark.sql.functions._
     val docs = Seq(
       (1L, "a b"),                                   // too_short (2 tokens)
       (2L, Seq.fill(200)("the quick fox").mkString(" ")), // too_long fires first
