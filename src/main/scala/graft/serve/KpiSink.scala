@@ -1,6 +1,9 @@
 package graft.serve
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -49,12 +52,11 @@ object KpiSink {
     }.toMap
 
   /** Write a whole item table: executors batch rows (25 at a time) and
-    * retry throttled batches with exponential backoff. `sleep` is
-    * injectable so tests don't wait out real backoff.
+    * retry throttled batches with exponential backoff (`MaxRetries`
+    * retries, `BaseDelayMs` doubling). `sleep` is injectable so tests
+    * don't wait out real backoff.
     */
-  def write(items: DataFrame, store: KvStore,
-            maxRetries: Int = MaxRetries, baseDelayMs: Long = BaseDelayMs,
-            sleep: Long => Unit = Thread.sleep): Unit =
+  def write(items: DataFrame, store: KvStore, sleep: Long => Unit = Thread.sleep): Unit =
     items.foreachPartition { (rows: Iterator[Row]) =>
       rows.grouped(BatchSize).foreach { batch =>
         val converted = batch.map(toItem)
@@ -64,18 +66,26 @@ object KpiSink {
           try { store.putBatch(converted); done = true }
           catch {
             case e: ThrottledException =>
-              if (retries >= maxRetries) throw e
-              sleep((1L << retries) * baseDelayMs) // 2^retries * base — :160
+              if (retries >= MaxRetries) throw e
+              sleep((1L << retries) * BaseDelayMs) // 2^retries * base — :160
               retries += 1
           }
         }
       }
     }
 
-  /** Test/reference implementation: a JVM-shared map keyed by
+  /** Test/reference implementation: a JVM-shared store keyed by
     * (id, timestamp) — overwrite-by-pkeys semantics
     * (`scripts/load_dynamodb.py:140`). Optionally throttles the first
     * `throttleFirstN` batch attempts to exercise the retry path.
+    *
+    * The instance is a serializable handle holding only the store's
+    * `id`; the state lives in one JVM-wide registry from id to a
+    * per-store `State`, so the copies Spark serializes into executor
+    * closures (local mode shares the JVM) and the DSv2 reader
+    * ([[KvDataSource]], which opens the store by id) all reach the same
+    * rows. Items enter through `putBatch`, which [[KpiSink.write]] calls
+    * once per batch; there is no other write path.
     *
     * The read side models the reference table's access patterns
     * (`docs/dynamodb-queries.md:42-101`, GSIs declared at
@@ -89,33 +99,29 @@ object KpiSink {
     * exactly the string-key BETWEEN semantics of the reference's
     * queries.
     */
-  class InMemoryKvStore(throttleFirstN: Int = 0) extends KvStore {
-    import InMemoryKvStore._
-    /** Stable handle for addressing this store across the DSv2 path. */
-    val id: String = java.util.UUID.randomUUID().toString
-    private def storeId: String = id
-    registry.putIfAbsent(storeId, new ConcurrentHashMap[(String, String), Item]())
-    kpiTypeIdx.putIfAbsent(storeId, new ConcurrentHashMap[String, ConcurrentHashMap[(String, String), Item]]())
-    genreDateIdx.putIfAbsent(storeId, new ConcurrentHashMap[String, ConcurrentHashMap[(String, String, String), Item]]())
-    attempts.putIfAbsent(storeId, new java.util.concurrent.atomic.AtomicInteger(0))
-    batchSizes.putIfAbsent(storeId, new ConcurrentHashMap[Int, Integer]())
-    lastAccess.putIfAbsent(storeId, "none")
+  final class InMemoryKvStore private (val id: String) extends KvStore {
+    import InMemoryKvStore.State
+
+    def this(throttleFirstN: Int = 0) = {
+      this(java.util.UUID.randomUUID().toString)
+      InMemoryKvStore.states.put(id, new State(throttleFirstN))
+    }
+
+    private def state: State = InMemoryKvStore.states.get(id)
 
     def putBatch(items: Seq[Item]): Unit = {
       require(items.size <= BatchSize, s"batch of ${items.size} exceeds $BatchSize")
-      val n = attempts.get(storeId).incrementAndGet()
-      if (n <= throttleFirstN) throw new ThrottledException(s"throttled attempt $n")
-      batchSizes.get(storeId).merge(items.size, 1, (a, b) => a + b)
-      items.foreach(upsert(storeId, _))
+      val st = state
+      val n  = st.attempts.incrementAndGet()
+      if (n <= st.throttleFirstN) throw new ThrottledException(s"throttled attempt $n")
+      st.batchSizes.merge(items.size, 1, (a, b) => a + b)
+      items.foreach(st.upsert)
     }
 
-    def size: Int = registry.get(storeId).size
-    def get(id: String, ts: String): Option[Item] = getItem(id, ts)
-    def batchAttempts: Int = attempts.get(storeId).get()
-    def batchSizeHistogram: Map[Int, Int] = {
-      import scala.jdk.CollectionConverters._
-      batchSizes.get(storeId).asScala.map { case (k, v) => k -> v.intValue() }.toMap
-    }
+    def size: Int = state.rows.size
+    def batchAttempts: Int = state.attempts.get()
+    def batchSizeHistogram: Map[Int, Int] =
+      state.batchSizes.asScala.map { case (k, v) => k -> v.intValue() }.toMap
 
     // ------------------------------------------------------------------
     // Read path — docs/dynamodb-queries.md access patterns
@@ -125,13 +131,19 @@ object KpiSink {
       * assert that a pushed-down DataFrame filter routed to an index
       * instead of a scan.
       */
-    def lastReadPattern: String = lastAccess.get(storeId)
+    def lastReadPattern: String = state.lastAccess
+
+    private def served(pattern: String): State = {
+      val st = state
+      st.lastAccess = pattern
+      st
+    }
 
     /** Point `get-item` on the composite primary key
       * (`docs/dynamodb-queries.md:44-49`).
       */
     def getItem(id: String, ts: String): Option[Item] =
-      InMemoryKvStore.getItem(storeId, id, ts)
+      Option(served("GetItem").rows.get((id, ts)))
 
     /** Key-condition query: one partition (id), optional sort-key range
       * on timestamp (`docs/dynamodb-queries.md:51-60`). Results sorted
@@ -139,151 +151,99 @@ object KpiSink {
       */
     def queryById(id: String, tsFrom: Option[String] = None,
                   tsTo: Option[String] = None): Seq[Item] =
-      InMemoryKvStore.queryById(storeId, id, tsFrom, tsTo)
+      served("Query(id)").rows.asScala.iterator.collect {
+        case ((i, ts), it) if i == id &&
+          tsFrom.forall(ts >= _) && tsTo.forall(ts <= _) => (ts, it)
+      }.toSeq.sortBy(_._1).map(_._2)
 
     /** `begins_with(id, prefix)` pattern over the id keyspace
       * (`docs/dynamodb-queries.md:252-257` — genre_metrics#date etc.).
       */
     def queryByIdPrefix(prefix: String): Seq[Item] =
-      InMemoryKvStore.queryByIdPrefix(storeId, prefix)
+      served("Query(id begins_with)").rows.asScala.iterator.collect {
+        case (k @ (i, _), it) if i.startsWith(prefix) => (k, it)
+      }.toSeq.sortBy(_._1).map(_._2)
 
     /** KpiTypeIndex: hash kpi_type, range timestamp
       * (`docs/dynamodb-queries.md:65-86`).
       */
     def queryByKpiType(kpiType: String, tsFrom: Option[String] = None,
                        tsTo: Option[String] = None): Seq[Item] =
-      InMemoryKvStore.queryByKpiType(storeId, kpiType, tsFrom, tsTo)
+      Option(served("KpiTypeIndex").kpiTypeIdx.get(kpiType)).map(_.asScala.iterator.collect {
+        case ((ts, _), it) if tsFrom.forall(ts >= _) && tsTo.forall(ts <= _) => (ts, it)
+      }.toSeq.sortBy(_._1).map(_._2)).getOrElse(Nil)
 
     /** GenreDateIndex: hash genre, range date
       * (`docs/dynamodb-queries.md:90-101,358-374`).
       */
     def queryByGenreDate(genre: String, dateFrom: Option[String] = None,
                          dateTo: Option[String] = None): Seq[Item] =
-      InMemoryKvStore.queryByGenreDate(storeId, genre, dateFrom, dateTo)
+      Option(served("GenreDateIndex").genreDateIdx.get(genre)).map(_.asScala.iterator.collect {
+        case ((d, _, _), it) if dateFrom.forall(d >= _) && dateTo.forall(d <= _) => (d, it)
+      }.toSeq.sortBy(_._1).map(_._2)).getOrElse(Nil)
 
     /** Full scan (`docs/dynamodb-queries.md:28-30,108-111`). */
-    def scanAll(): Seq[Item] = InMemoryKvStore.scanAll(storeId)
+    def scanAll(): Seq[Item] =
+      served("Scan").rows.asScala.iterator.toSeq.sortBy(_._1).map(_._2)
   }
 
   object InMemoryKvStore {
-    // local-mode executors share the JVM; keyed statics make the store
-    // visible across the serialized closure copies
-    private val registry     = new ConcurrentHashMap[String, ConcurrentHashMap[(String, String), Item]]()
-    private val kpiTypeIdx   = new ConcurrentHashMap[String, ConcurrentHashMap[String, ConcurrentHashMap[(String, String), Item]]]()
-    private val genreDateIdx = new ConcurrentHashMap[String, ConcurrentHashMap[String, ConcurrentHashMap[(String, String, String), Item]]]()
-    private val attempts     = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-    private val batchSizes   = new ConcurrentHashMap[String, ConcurrentHashMap[Int, Integer]]()
-    private val lastAccess   = new ConcurrentHashMap[String, String]()
-
-    /** Upsert one item: overwrite by (id, timestamp) and keep both
-      * secondary indexes consistent — if the overwrite changed an index
-      * attribute, the stale index entry is removed first (DynamoDB does
-      * this index maintenance on every PutItem).
+    /** Everything one store holds: rows by (id, timestamp), both
+      * secondary indexes, the batch attempt counter and size histogram,
+      * the last read's access pattern, and the throttle setting.
       */
-    private def upsert(storeId: String, it: Item): Unit = {
-      val key  = (it("id").toString, it("timestamp").toString)
-      val prev = registry.get(storeId).put(key, it)
-      Option(prev).foreach(deindex(storeId, key, _))
-      index(storeId, key, it)
-    }
+    private final class State(val throttleFirstN: Int) {
+      val rows         = new ConcurrentHashMap[(String, String), Item]()
+      val kpiTypeIdx   = new ConcurrentHashMap[String, ConcurrentHashMap[(String, String), Item]]()
+      val genreDateIdx = new ConcurrentHashMap[String, ConcurrentHashMap[(String, String, String), Item]]()
+      val attempts     = new AtomicInteger(0)
+      val batchSizes   = new ConcurrentHashMap[Int, Integer]()
+      @volatile var lastAccess: String = "none"
 
-    private def index(storeId: String, key: (String, String), it: Item): Unit = {
-      it.get("kpi_type").foreach { kt =>
-        kpiTypeIdx.get(storeId)
-          .computeIfAbsent(kt.toString, _ => new ConcurrentHashMap())
-          .put((key._2, key._1), it)
+      /** Upsert one item: overwrite by (id, timestamp) and keep both
+        * secondary indexes consistent — if the overwrite changed an index
+        * attribute, the stale index entry is removed first (DynamoDB does
+        * this index maintenance on every PutItem).
+        */
+      def upsert(it: Item): Unit = {
+        val key = (it("id").toString, it("timestamp").toString)
+        Option(rows.put(key, it)).foreach(deindex(key, _))
+        index(key, it)
       }
-      it.get("genre").foreach { g =>
-        it.get("date").foreach { d =>
-          genreDateIdx.get(storeId)
-            .computeIfAbsent(g.toString, _ => new ConcurrentHashMap())
-            .put((d.toString, key._1, key._2), it)
+
+      private def index(key: (String, String), it: Item): Unit = {
+        it.get("kpi_type").foreach { kt =>
+          kpiTypeIdx.computeIfAbsent(kt.toString, _ => new ConcurrentHashMap())
+            .put((key._2, key._1), it)
+        }
+        it.get("genre").foreach { g =>
+          it.get("date").foreach { d =>
+            genreDateIdx.computeIfAbsent(g.toString, _ => new ConcurrentHashMap())
+              .put((d.toString, key._1, key._2), it)
+          }
+        }
+      }
+
+      private def deindex(key: (String, String), prev: Item): Unit = {
+        prev.get("kpi_type").foreach { kt =>
+          Option(kpiTypeIdx.get(kt.toString)).foreach(_.remove((key._2, key._1)))
+        }
+        prev.get("genre").foreach { g =>
+          prev.get("date").foreach { d =>
+            Option(genreDateIdx.get(g.toString)).foreach(_.remove((d.toString, key._1, key._2)))
+          }
         }
       }
     }
 
-    private def deindex(storeId: String, key: (String, String), prev: Item): Unit = {
-      prev.get("kpi_type").foreach { kt =>
-        Option(kpiTypeIdx.get(storeId).get(kt.toString))
-          .foreach(_.remove((key._2, key._1)))
-      }
-      prev.get("genre").foreach { g =>
-        prev.get("date").foreach { d =>
-          Option(genreDateIdx.get(storeId).get(g.toString))
-            .foreach(_.remove((d.toString, key._1, key._2)))
-        }
-      }
-    }
+    // local-mode executors share the JVM: the registry makes one store
+    // visible across its serialized handle copies
+    private val states = new ConcurrentHashMap[String, State]()
 
-    /** Batch put addressed by store id — the DSv2 writer's entry point
-      * (`KvDataSource`). Same overwrite-by-(id, timestamp) semantics.
-      */
-    private[serve] def putById(storeId: String, items: Seq[Item]): Unit = {
-      require(items.size <= BatchSize, s"batch of ${items.size} exceeds $BatchSize")
-      val m = registry.get(storeId)
-      require(m != null, s"unknown store id $storeId — create the InMemoryKvStore first")
-      batchSizes.get(storeId).merge(items.size, 1, (a, b) => a + b)
-      items.foreach(upsert(storeId, _))
-    }
-
-    // ------------------------------------------------------------------
-    // Read path, addressed by store id (the DSv2 reader's entry points;
-    // instance methods above delegate here)
-    // ------------------------------------------------------------------
-
-    private def table(storeId: String): ConcurrentHashMap[(String, String), Item] = {
-      val m = registry.get(storeId)
-      require(m != null, s"unknown store id $storeId — create the InMemoryKvStore first")
-      m
-    }
-    private def served(storeId: String, pattern: String): Unit =
-      lastAccess.put(storeId, pattern)
-
-    private[serve] def getItem(storeId: String, id: String, ts: String): Option[Item] = {
-      served(storeId, "GetItem")
-      Option(table(storeId).get((id, ts)))
-    }
-
-    private[serve] def queryById(storeId: String, id: String,
-                                 tsFrom: Option[String], tsTo: Option[String]): Seq[Item] = {
-      import scala.jdk.CollectionConverters._
-      served(storeId, "Query(id)")
-      table(storeId).asScala.iterator.collect {
-        case ((i, ts), it) if i == id &&
-          tsFrom.forall(ts >= _) && tsTo.forall(ts <= _) => (ts, it)
-      }.toSeq.sortBy(_._1).map(_._2)
-    }
-
-    private[serve] def queryByIdPrefix(storeId: String, prefix: String): Seq[Item] = {
-      import scala.jdk.CollectionConverters._
-      served(storeId, "Query(id begins_with)")
-      table(storeId).asScala.iterator.collect {
-        case (k @ (i, _), it) if i.startsWith(prefix) => (k, it)
-      }.toSeq.sortBy(_._1).map(_._2)
-    }
-
-    private[serve] def queryByKpiType(storeId: String, kpiType: String,
-                                      tsFrom: Option[String], tsTo: Option[String]): Seq[Item] = {
-      import scala.jdk.CollectionConverters._
-      served(storeId, "KpiTypeIndex")
-      Option(kpiTypeIdx.get(storeId).get(kpiType)).map(_.asScala.iterator.collect {
-        case ((ts, _), it) if tsFrom.forall(ts >= _) && tsTo.forall(ts <= _) => (ts, it)
-      }.toSeq.sortBy(_._1).map(_._2)).getOrElse(Nil)
-    }
-
-    private[serve] def queryByGenreDate(storeId: String, genre: String,
-                                        dateFrom: Option[String], dateTo: Option[String]): Seq[Item] = {
-      import scala.jdk.CollectionConverters._
-      served(storeId, "GenreDateIndex")
-      Option(genreDateIdx.get(storeId).get(genre)).map(_.asScala.iterator.collect {
-        case ((d, _, _), it) if dateFrom.forall(d >= _) && dateTo.forall(d <= _) => (d, it)
-      }.toSeq.sortBy(_._1).map(_._2)).getOrElse(Nil)
-    }
-
-    private[serve] def scanAll(storeId: String): Seq[Item] = {
-      import scala.jdk.CollectionConverters._
-      served(storeId, "Scan")
-      table(storeId).asScala.iterator.toSeq.sortBy(_._1).map(_._2)
+    /** The store a DSv2 read names by id. */
+    private[serve] def open(storeId: String): InMemoryKvStore = {
+      require(states.containsKey(storeId), s"unknown store id $storeId — create the InMemoryKvStore first")
+      new InMemoryKvStore(storeId)
     }
   }
 }

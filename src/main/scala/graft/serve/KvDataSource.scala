@@ -5,38 +5,27 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 face of the KV serving store (S8's "or DataSource V2"
-  * alternative to `foreachPartition`):
+/** DataSource V2 read face of the KV serving store (S8). Items enter the
+  * store only through [[KpiSink.write]] (executor-side batches of 25 with
+  * backoff); this source reads them back as a DataFrame:
   *
   * {{{
-  *   items.write.format("graft.serve.kv")
-  *        .option("store", store.id)
-  *        .mode("append").save()
-  *   val back = spark.read.format("graft.serve.kv")
+  *   val back = spark.read.format(KvDataSource.Format)
   *        .option("store", store.id).load()
   * }}}
   *
-  * Write: each task's `DataWriter` buffers 25 rows and flushes a batch to
-  * the store — the same batching contract as [[KpiSink.write]], but
-  * planned as a proper V2 `BatchWrite` (shows up in the physical plan,
-  * gets Spark's task-retry/abort lifecycle instead of hand-rolled
-  * `foreachPartition` semantics). Writes are idempotent under task retry
-  * because the store overwrites by (id, timestamp).
-  *
-  * Read: the scan supports filter pushdown that routes a DataFrame
-  * predicate to the store's native access pattern — the reference
-  * table's consumers' query shapes (`docs/dynamodb-queries.md:42-101`):
+  * The scan supports filter pushdown that routes a DataFrame predicate
+  * to the store's native access pattern — the reference table's
+  * consumers' query shapes (`docs/dynamodb-queries.md:42-101`):
   *
   *   - `id = ? AND timestamp = ?`      → point GetItem
   *   - `id = ? [AND timestamp range]`  → primary-key Query
@@ -48,8 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Consumed predicates are reported as pushed (they vanish from the
   * post-scan `Filter`); column pruning is honored too, so
   * `SELECT value WHERE kpi_type = ...` does an index read and
-  * materializes one column. A real deployment would swap the in-memory
-  * registry for a DynamoDB-style client with the same routing.
+  * materializes one column. The reader opens the store by id and calls
+  * the same [[KpiSink.InMemoryKvStore]] methods any caller does; a real
+  * deployment would swap in a DynamoDB-style client with the same
+  * routing.
   */
 class KvDataSource extends TableProvider {
 
@@ -68,7 +59,10 @@ class KvDataSource extends TableProvider {
 
 object KvDataSource {
 
-  val Format = "graft.serve.kv"
+  /** The name `spark.read.format` resolves: the provider's class name
+    * (there is no `DataSourceRegister` short name).
+    */
+  val Format: String = classOf[KvDataSource].getName
 
   /** Item-map → relational schema: the union of attribute names across
     * items, typed from the first non-null value seen. Numbers read back
@@ -76,7 +70,7 @@ object KvDataSource {
     * origin of every KPI value is a double); `id`/`timestamp` lead.
     */
   private[serve] def inferStoreSchema(storeId: String): StructType = {
-    val items = KpiSink.InMemoryKvStore.scanAll(storeId)
+    val items = KpiSink.InMemoryKvStore.open(storeId).scanAll()
     val types = scala.collection.mutable.LinkedHashMap[String, DataType]()
     items.foreach(_.foreach { case (k, v) =>
       if (!types.contains(k)) types(k) = v match {
@@ -150,43 +144,29 @@ object KvDataSource {
   }
 
   private[serve] def execute(storeId: String, spec: QuerySpec): Seq[KpiSink.Item] = {
-    import KpiSink.InMemoryKvStore
     import QuerySpec._
+    val store = KpiSink.InMemoryKvStore.open(storeId)
     spec match {
-      case Point(id, ts)            => InMemoryKvStore.getItem(storeId, id, ts).toSeq
-      case ById(id, from, to)       => InMemoryKvStore.queryById(storeId, id, from, to)
-      case ByIdPrefix(p)            => InMemoryKvStore.queryByIdPrefix(storeId, p)
-      case ByKpiType(kt, from, to)  => InMemoryKvStore.queryByKpiType(storeId, kt, from, to)
-      case ByGenreDate(g, from, to) => InMemoryKvStore.queryByGenreDate(storeId, g, from, to)
-      case FullScan                 => InMemoryKvStore.scanAll(storeId)
+      case Point(id, ts)            => store.getItem(id, ts).toSeq
+      case ById(id, from, to)       => store.queryById(id, from, to)
+      case ByIdPrefix(p)            => store.queryByIdPrefix(p)
+      case ByKpiType(kt, from, to)  => store.queryByKpiType(kt, from, to)
+      case ByGenreDate(g, from, to) => store.queryByGenreDate(g, from, to)
+      case FullScan                 => store.scanAll()
     }
   }
 
   private class KvTable(tableSchema: StructType, props: Map[String, String])
-      extends Table with SupportsWrite with SupportsRead {
+      extends Table with SupportsRead {
     private def storeId: String = props.getOrElse("store",
       throw new IllegalArgumentException("option 'store' (a store id) is required"))
     override def name(): String = Format
     override def schema(): StructType = tableSchema
     override def capabilities(): util.Set[TableCapability] =
-      Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE).asJava
-    override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-      new WriteBuilder with SupportsTruncate {
-        // truncate = overwrite mode; the store's overwrite-by-pkeys
-        // semantics make it a no-op distinction here
-        override def truncate(): WriteBuilder = this
-        override def build(): Write = new Write {
-          override def toBatch: BatchWrite = new KvBatchWrite(info.schema(), storeId)
-        }
-      }
+      Set(TableCapability.BATCH_READ).asJava
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
       new KvScanBuilder(tableSchema, storeId)
   }
-
-  // ------------------------------------------------------------------
-  // Read path
-  // ------------------------------------------------------------------
 
   private class KvScanBuilder(fullSchema: StructType, storeId: String)
       extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
@@ -212,7 +192,7 @@ object KvDataSource {
     override def readSchema(): StructType = schema
     override def toBatch: Batch = this
     override def description(): String =
-      s"graft.serve.kv store=$storeId access=$spec pushed=${pushed.mkString(",")}"
+      s"KvDataSource store=$storeId access=$spec pushed=${pushed.mkString(",")}"
     override def planInputPartitions(): Array[InputPartition] =
       Array(KvInputPartition(storeId, spec))
     override def createReaderFactory(): PartitionReaderFactory =
@@ -251,43 +231,5 @@ object KvDataSource {
           }
         }.getOrElse(null).asInstanceOf[AnyRef]
       }.asInstanceOf[Array[Any]])
-  }
-
-  // ------------------------------------------------------------------
-  // Write path
-  // ------------------------------------------------------------------
-
-  private class KvBatchWrite(schema: StructType, storeId: String) extends BatchWrite {
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      KvWriterFactory(schema, storeId)
-    override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-    override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-  }
-
-  private case class KvWriterFactory(schema: StructType, storeId: String)
-      extends DataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-      new KvDataWriter(schema, storeId)
-  }
-
-  private object Done extends WriterCommitMessage
-
-  private class KvDataWriter(schema: StructType, storeId: String)
-      extends DataWriter[InternalRow] {
-    private val deser =
-      ExpressionEncoder(RowEncoder.encoderFor(schema)).resolveAndBind().createDeserializer()
-    private val buf = scala.collection.mutable.ArrayBuffer[KpiSink.Item]()
-
-    override def write(record: InternalRow): Unit = {
-      buf += KpiSink.toItem(deser(record.copy()))
-      if (buf.size >= KpiSink.BatchSize) flush()
-    }
-    private def flush(): Unit = if (buf.nonEmpty) {
-      KpiSink.InMemoryKvStore.putById(storeId, buf.toSeq)
-      buf.clear()
-    }
-    override def commit(): WriterCommitMessage = { flush(); Done }
-    override def abort(): Unit = buf.clear()
-    override def close(): Unit = ()
   }
 }

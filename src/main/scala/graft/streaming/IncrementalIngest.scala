@@ -87,8 +87,10 @@ object IncrementalIngest {
     * Exactly-once note: the `foreachBatch` split means a batch retried
     * after a partial staging write can duplicate rows (the single-sink
     * parquet file log's transactionality doesn't extend across two
-    * sinks). Staged history is re-run-safe downstream via
-    * [[graft.validate.Validator.dedupStreams]].
+    * sinks). Staged history is re-run-safe downstream only where the
+    * reader dedups it with [[graft.validate.Validator.dedupStreams]]:
+    * `PipelineJob.run` does so when `Config.dedupStagedStreams` is set,
+    * and that flag defaults to false.
     */
   def runAvailableNow(spark: SparkSession, inputDir: String, stagingDir: String,
                       checkpoint: String, quarantineDir: Option[String] = None,

@@ -10,12 +10,13 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.RDDBlockId
 
 import graft.SparkSpec
 import graft.io.ParquetIO
 import graft.kpi.KpiQueries
-import graft.serve.{KpiItems, KpiSink}
+import graft.serve.{KpiItems, KpiSink, KvDataSource}
 
 object PipelineSpec {
   /** A store that fails every batch carrying one `kpi_type`, with an
@@ -128,6 +129,19 @@ class PipelineSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Map[Row, Int] =
     df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  test("served items read back through the KV data source, one KpiTypeIndex read per KPI table") {
+    val store = new KpiSink.InMemoryKvStore()
+    val r = PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_read")), Some(store))
+    val kv = spark.read.format(KvDataSource.Format).option("store", store.id).load()
+    val tables = Seq("user" -> "user_kpis", "genre_daily" -> "genre_daily_metrics_kpi",
+      "genre_top_songs" -> "genre_top_songs_kpi", "genre_top" -> "genre_top_genres_kpi",
+      "trending" -> "trending_kpis")
+    for ((kpiType, table) <- tables) withClue(s"$kpiType: ") {
+      kv.filter(col("kpi_type") === kpiType).count() shouldBe r.kpiRows(table)
+      store.lastReadPattern shouldBe "KpiTypeIndex"
+    }
+  }
 
   test("a failing serve write is rethrown once every branch is done, leaving nothing behind") {
     val before = persistedRdds

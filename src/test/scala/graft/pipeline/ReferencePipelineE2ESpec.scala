@@ -5,7 +5,7 @@ import java.io.PrintWriter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.serve.KpiSink
+import graft.serve.{KpiSink, KvDataSource}
 
 /** The reference's full three-job chain — validate → transform/KPIs →
   * serve (`dags/music_streaming_pipeline.py:888-937` task order) — run
@@ -96,7 +96,7 @@ class ReferencePipelineE2ESpec extends SparkSpec {
     store.size.toLong shouldBe r.servedItems
 
     // — DSv2 read-back, GSI 1 (KpiTypeIndex): genre_daily by kpi_type
-    val kv = spark.read.format("graft.serve.KvDataSource")
+    val kv = spark.read.format(KvDataSource.Format)
       .option("store", store.id).load()
     val dailyBack = kv.filter(col("kpi_type") === "genre_daily")
       .select("genre", "listen_count").collect()

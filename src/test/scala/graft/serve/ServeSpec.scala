@@ -62,7 +62,7 @@ class ServeSpec extends SparkSpec {
     // overwrite on the same (id, timestamp)
     KpiSink.write(items.withColumn("v", col("v") * 10), store)
     store.size shouldBe 60
-    store.get("ID_1", runTs).get("v") shouldBe 10
+    store.getItem("ID_1", runTs).get("v") shouldBe 10
   }
 
   test("sink retries throttled batches with exponential backoff then succeeds") {
@@ -81,21 +81,10 @@ class ServeSpec extends SparkSpec {
     val store = new KpiSink.InMemoryKvStore(throttleFirstN = 100)
     val items = Seq(("A", runTs)).toDF("id", "timestamp").coalesce(1)
     val e = intercept[Exception] {
-      KpiSink.write(items, store, maxRetries = 2, sleep = _ => ())
+      KpiSink.write(items, store, sleep = _ => ())
     }
     e.getMessage should include("throttled")
-  }
-
-  test("DataSource V2 path: df.write.format(graft.serve.kv) batches into the store") {
-    val store = new KpiSink.InMemoryKvStore()
-    val items = (1 to 60).map(i => (s"V2_$i", runTs, i.toDouble))
-      .toDF("id", "timestamp", "score").coalesce(1)
-    items.write.format("graft.serve.KvDataSource")
-      .option("store", store.id).mode("append").save()
-    store.size shouldBe 60
-    store.batchSizeHistogram shouldBe Map(25 -> 2, 10 -> 1)
-    // float coercion flows through the same toItem path
-    store.get("V2_1", runTs).get("score") shouldBe BigDecimal("1.0")
+    store.batchAttempts shouldBe KpiSink.MaxRetries + 1
   }
 
   // ------------------------------------------------------------------
@@ -182,7 +171,7 @@ class ServeSpec extends SparkSpec {
 
   test("DSv2 read: filters push down to the right index; columns prune") {
     val store = readStore()
-    val df = spark.read.format("graft.serve.KvDataSource")
+    val df = spark.read.format(KvDataSource.Format)
       .option("store", store.id).load()
     // inferred schema: keys first, value as double
     df.schema.fieldNames.take(2) shouldBe Array("id", "timestamp")
@@ -220,10 +209,9 @@ class ServeSpec extends SparkSpec {
     val items = (1 to 40).map(i =>
       (f"KPI_$i%03d", runTs, "demo_kpi", i.toDouble))
       .toDF("id", "timestamp", "kpi_type", "value")
-    items.write.format("graft.serve.KvDataSource")
-      .option("store", store.id).mode("append").save()
+    KpiSink.write(items, store)
 
-    val back = spark.read.format("graft.serve.KvDataSource")
+    val back = spark.read.format(KvDataSource.Format)
       .option("store", store.id).load()
       .filter(col("kpi_type") === "demo_kpi")
     back.count() shouldBe 40
