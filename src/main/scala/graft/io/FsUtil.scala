@@ -1,12 +1,16 @@
 package graft.io
 
+import java.net.URI
 import java.security.MessageDigest
+
+import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem-level operators (S9/S11/S12): existence probes, the
-  * reference-data CDC checksum gate, and the archival move. All are
+/** Filesystem-level operators (S9/S11/S12): existence probes, file
+  * identity, the reference-data CDC checksum gate, and the archival
+  * move. All are
   * driver-side control-plane operations over the Hadoop `FileSystem`
   * abstraction (works identically for file://, hdfs://, s3a://) — they
   * never touch executor dataflow, so there is nothing to distribute.
@@ -22,6 +26,22 @@ object FsUtil {
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(PathUtil.cleanPath(path))
     fs(spark, p).exists(p)
+  }
+
+  /** The URI under which Spark's file scans name the file at `path` (what
+    * `input_file_name()` reports): `path`, a plain path (relative ones
+    * resolve against the working directory) or a URI, qualified by its
+    * file system, with doubled slashes collapsed and reserved characters
+    * percent-encoded. A local `/data//streams a.csv` becomes
+    * `file:///data/streams%20a.csv`; every spelling of one file gives one
+    * URI.
+    */
+  def fileUri(spark: SparkSession, path: String): String = {
+    val clean = PathUtil.cleanPath(path)
+    val p = Try(new URI(clean)).toOption.filter(_.getScheme != null)
+      .fold(new Path(clean))(new Path(_))
+    val q = fs(spark, p).makeQualified(p).toUri
+    new URI(q.getScheme, Option(q.getAuthority).getOrElse(""), q.getPath, null, null).toString
   }
 
   /** MD5 content hash of a file — the reference's CDC fingerprint

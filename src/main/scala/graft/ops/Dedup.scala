@@ -768,39 +768,13 @@ object Dedup {
     * recomputing shingling doubles the dominant cost). They stay
     * registered after the result is consumed, because the result is
     * lazy — this method cannot know when the caller has materialized
-    * it. Long-lived sessions running many batches should use
-    * [[withIncrementalNearDupPairs]], which brackets the cache
-    * lifecycle around the caller's consumption; callers of the lazy
-    * form own the unpersist (graft's drivers Bench/Verify clear caches
-    * between queries).
+    * it. The caller owns the unpersist (graft's mains Bench and Verify
+    * clear caches between queries).
     */
   def incrementalNearDupPairs(newDocs: DataFrame, store: DataFrame,
                               idCol: String, textCol: String,
                               n: Int = 3, tau: Double = 0.5,
-                              maxDf: Option[Int] = None): DataFrame =
-    incrementalNearDupPairsTracked(newDocs, store, idCol, textCol, n, tau, maxDf)._1
-
-  /** Cache-bracketed form of [[incrementalNearDupPairs]]: runs `consume`
-    * (which must MATERIALIZE the frame — collect/write/count), then
-    * unpersists the two intermediate frames this computation cached, so
-    * a long-lived session processing batch after batch accumulates no
-    * cached state. This is the form a streaming/daily-batch driver
-    * should call.
-    */
-  def withIncrementalNearDupPairs[T](newDocs: DataFrame, store: DataFrame,
-                                     idCol: String, textCol: String,
-                                     n: Int = 3, tau: Double = 0.5,
-                                     maxDf: Option[Int] = None)
-                                    (consume: DataFrame => T): T = {
-    val (result, cached) =
-      incrementalNearDupPairsTracked(newDocs, store, idCol, textCol, n, tau, maxDf)
-    try consume(result)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  private def incrementalNearDupPairsTracked(
-      newDocs: DataFrame, store: DataFrame, idCol: String, textCol: String,
-      n: Int, tau: Double, maxDf: Option[Int]): (DataFrame, Seq[DataFrame]) = {
+                              maxDf: Option[Int] = None): DataFrame = {
     val newSets = shingleSets(newDocs, idCol, textCol, n).cache()
     // the store is normally MATERIALIZED (parquet written by a previous
     // batch); cache() makes a computed store frame behave the same way
@@ -869,14 +843,13 @@ object Dedup {
           .filter(col("jaccard") >= tau)
           .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
     }
-    val result = scored
+    scored
       .join(newIds.select(col("doc_id").as("a_id"), lit(1).as("_an")), Seq("a_id"), "left")
       .join(newIds.select(col("doc_id").as("b_id"), lit(1).as("_bn")), Seq("b_id"), "left")
       .withColumn("pair_type",
         when(col("_an").isNotNull && col("_bn").isNotNull, lit("new_new"))
           .otherwise(lit("new_corpus")))
       .select("a_id", "b_id", "jaccard", "pair_type")
-    (result, Seq(newSets, storeSets))
   }
 
   /** Benchmark-contamination check: which TRAINING docs share at least

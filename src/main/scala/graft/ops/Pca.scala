@@ -52,19 +52,9 @@ object Pca {
   /** Per-dim two-level ordered-fold sum of `termCol` over frame
     * (_id, _j, term) → (_j, total). Addition order: vec-id within
     * cell, then cell — deterministic and bounded per group.
-    *
-    * `ordered = false` is the PRODUCTION fold-swap knob: plain
-    * partial+final `sum` (map-side combine, no collect_list state,
-    * no per-group sort). It gives up cross-engine bit-equality of the
-    * double addition tree — the oracle regime keeps `ordered = true`;
-    * a 100 TB run that only needs ~1e-12-relative stability takes the
-    * swap (measured at fair 100× in PERF.md r10).
     */
-  private def dimSums(slots: DataFrame, cells: Int,
-                      ordered: Boolean): DataFrame =
-    if (!ordered)
-      slots.groupBy(col("_j")).agg(sum(col("_t")).as("total"))
-    else slots
+  private def dimSums(slots: DataFrame, cells: Int): DataFrame =
+    slots
       .groupBy(col("_j"), pmod(col("_id"), lit(cells)).as("_cell"))
       .agg(array_sort(collect_list(struct(col("_id"), col("_t")))).as("_a"))
       .select(col("_j"), col("_cell"),
@@ -76,7 +66,7 @@ object Pca {
 
   /** (means, n): per-dim mean as an Array[Double] in dim order. */
   def dimMeans(df: DataFrame, idCol: String, vecCol: String,
-               cells: Int = 256, ordered: Boolean = true): (Array[Double], Long) = {
+               cells: Int = 256): (Array[Double], Long) = {
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
     val n = base.count()
     // cells key on pmod(_id) and folds sort by id: partitioning-safe
@@ -87,7 +77,7 @@ object Pca {
     // sort the d rows on the driver: .orderBy here would add a range
     // exchange whose boundary SAMPLING is its own job (r14 — the whole
     // entry is job-count-bound, see the object scaladoc)
-    val sums = dimSums(slots, cells, ordered).collect()
+    val sums = dimSums(slots, cells).collect()
       .sortBy(r => r.getAs[Number](0).longValue())
     (sums.map(r => r.getDouble(1) / n.toDouble), n)
   }
@@ -112,44 +102,33 @@ object Pca {
     * driver-side rounds over the d×d matrix (object scaladoc).
     */
   def topDirection(df: DataFrame, idCol: String, vecCol: String,
-                   iters: Int = 3, cells: Int = 256,
-                   ordered: Boolean = true): (Array[Double], Array[Double]) = {
+                   iters: Int = 3, cells: Int = 256): (Array[Double], Array[Double]) = {
     require(iters >= 1 && iters <= 10, "1 <= iters <= 10")
-    val (means, _) = dimMeans(df, idCol, vecCol, cells, ordered)
+    val (means, _) = dimMeans(df, idCol, vecCol, cells)
     val d = means.length
     val c = centered(df, idCol, vecCol, means)
     // Upper-triangle Gram, position p ↔ pair (j, k ≥ j) in (j, k)
-    // lexicographic order. The ordered regime folds whole ROWS in id
-    // order within each cell (the per-pair addition order is the same
-    // two-level id-in-cell/cell tree as dimSums, at 1/d the group
-    // count: only n rows shuffle, never n·d² pair slots); production
-    // `ordered = false` is the plain partial+final sum over exploded
-    // pair slots — map-side combined, no per-group list state.
+    // lexicographic order. Whole ROWS fold in id order within each cell
+    // (the per-pair addition order is the same two-level id-in-cell/cell
+    // tree as dimSums, at 1/d the group count: only n rows shuffle,
+    // never n·d² pair slots).
     val nPairs = d * (d + 1) / 2
-    val gramRows =
-      if (!ordered)
-        c.select(posexplode(expr(
-            s"""flatten(transform(sequence(0, ${d - 1}), j ->
-               |  transform(sequence(j, ${d - 1}), k -> _cv[j] * _cv[k])))"""
-              .stripMargin)).as(Seq("_p", "_t")))
-          .groupBy(col("_p")).agg(sum(col("_t")).as("total"))
-          .collect()
-      else c
-        .groupBy(pmod(col("_id"), lit(cells)).as("_cell"))
-        .agg(array_sort(collect_list(struct(col("_id"), col("_cv")))).as("_a"))
-        .select(col("_cell"), expr(
-          s"""aggregate(_a,
-             |  array_repeat(cast(0.0 as double), $nPairs),
-             |  (acc, r) -> zip_with(acc,
-             |    flatten(transform(sequence(0, ${d - 1}), j ->
-             |      transform(sequence(j, ${d - 1}), k -> r._cv[j] * r._cv[k]))),
-             |    (a, t) -> a + t))""".stripMargin).as("_gp"))
-        .select(col("_cell"), posexplode(col("_gp")).as(Seq("_p", "_v")))
-        .groupBy(col("_p"))
-        .agg(array_sort(collect_list(struct(col("_cell"), col("_v")))).as("_a"))
-        .select(col("_p"),
-          expr("aggregate(_a, cast(0.0 as double), (a, s) -> a + s._v)").as("total"))
-        .collect()
+    val gramRows = c
+      .groupBy(pmod(col("_id"), lit(cells)).as("_cell"))
+      .agg(array_sort(collect_list(struct(col("_id"), col("_cv")))).as("_a"))
+      .select(col("_cell"), expr(
+        s"""aggregate(_a,
+           |  array_repeat(cast(0.0 as double), $nPairs),
+           |  (acc, r) -> zip_with(acc,
+           |    flatten(transform(sequence(0, ${d - 1}), j ->
+           |      transform(sequence(j, ${d - 1}), k -> r._cv[j] * r._cv[k]))),
+           |    (a, t) -> a + t))""".stripMargin).as("_gp"))
+      .select(col("_cell"), posexplode(col("_gp")).as(Seq("_p", "_v")))
+      .groupBy(col("_p"))
+      .agg(array_sort(collect_list(struct(col("_cell"), col("_v")))).as("_a"))
+      .select(col("_p"),
+        expr("aggregate(_a, cast(0.0 as double), (a, s) -> a + s._v)").as("total"))
+      .collect()
     val g = Array.ofDim[Double](d * d)
     gramRows.foreach { r =>
       val p = r.getAs[Number](0).intValue()
@@ -179,9 +158,8 @@ object Pca {
 
   /** Entry surface: the final direction as (dim, loading). */
   def topComponent(spark: SparkSession, df: DataFrame, idCol: String,
-                   vecCol: String, iters: Int = 3, cells: Int = 256,
-                   ordered: Boolean = true): DataFrame = {
-    val (v, _) = topDirection(df, idCol, vecCol, iters, cells, ordered)
+                   vecCol: String, iters: Int = 3, cells: Int = 256): DataFrame = {
+    val (v, _) = topDirection(df, idCol, vecCol, iters, cells)
     import spark.implicits._
     v.zipWithIndex.map { case (x, j) => (j.toLong, x) }.toSeq
       .toDF("dim", "_l")
@@ -193,9 +171,8 @@ object Pca {
     * pass with v and μ injected as literals. Output: (id, proj).
     */
   def projections(df: DataFrame, idCol: String, vecCol: String,
-                  iters: Int = 3, cells: Int = 256,
-                  ordered: Boolean = true): DataFrame = {
-    val (v, means) = topDirection(df, idCol, vecCol, iters, cells, ordered)
+                  iters: Int = 3, cells: Int = 256): DataFrame = {
+    val (v, means) = topDirection(df, idCol, vecCol, iters, cells)
     centered(df, idCol, vecCol, means)
       .select(col("_id").as(idCol), round(dot(col("_cv"), v), 6).as("proj"))
   }

@@ -1173,7 +1173,7 @@ object Similarity {
     * anisotropic embedding space has a dominant common direction, and
     * vectors hugging it (cos → 1) carry little discriminative signal;
     * the per-vector score both measures the pathology corpus-wide and
-    * flags the worst offenders for the [[graft.ops.Pca.allButTheTop]]
+    * flags the worst offenders for the [[graft.ops.Pca.projections]]
     * correction.
     *
     * Exactness: components integerize to micros

@@ -32,7 +32,12 @@ import graft.validate.Validator
   *     is never re-parsed — and a changed one is written to staging
   *     straight from its parse, with no cached copy;
   *   - output verification uses `take(1)` existence probes (O4) instead
-  *     of S3 polling.
+  *     of S3 polling;
+  *   - streams are staged exactly once per file
+  *     (`graft.validate.Validator.stageStreams`): the staged rows carry
+  *     their source file and are their own ledger, so a re-run after a
+  *     crash, or a file already staged by `IncrementalIngest`, stages
+  *     nothing twice and the KPIs count every play once (SURVEY §7.4.6).
   */
 object PipelineJob {
 
@@ -45,8 +50,7 @@ object PipelineJob {
       quarantineDir: Option[String] = None,
       runTs: String = "1970-01-01T00:00:00",
       approxDistinct: Boolean = false,
-      deskewTrending: Boolean = true,
-      dedupStagedStreams: Boolean = false)
+      deskewTrending: Boolean = true)
 
   final case class Result(stagedStreamRows: Long, kpiRows: Map[String, Long],
                           servedItems: Long)
@@ -112,20 +116,6 @@ object PipelineJob {
     ParquetIO.read(spark, staged)
   }
 
-  /** Validation job: one permissive scan over the stream CSVs →
-    * quarantine → clean, appended to the staged history (S6), which is
-    * returned. Row counts ride the write action via `observe()` — no
-    * second pass over the inputs just for logging (SURVEY §4.3: the
-    * reference re-runs count() eagerly at 8+ sites). The scan's cached
-    * parse is released once the append and the quarantine write are done.
-    */
-  private def stageStreams(spark: SparkSession, cfg: Config, obs: Observation): DataFrame = {
-    val (ingested, parse) = Validator.ingestStreams(spark, cfg.streamFiles, cfg.quarantineDir)
-    try ParquetIO.writeAppend(ingested.observe(obs, rowCount), s"${cfg.stagingDir}/streams")
-    finally parse.unpersist()
-    ParquetIO.read(spark, s"${cfg.stagingDir}/streams")
-  }
-
   /** One KPI's chain: write, `take(1)` probe, re-read, item projection and
     * serve. Returns the KPI's rows and the items served.
     */
@@ -153,21 +143,26 @@ object PipelineJob {
 
   def run(spark: SparkSession, cfg: Config,
           sink: Option[KpiSink.KvStore] = None): Result = {
-    // 1 — validation job and both dimension loads, at once
-    val obs = new Observation("staged_streams")
-    val Seq(stagedRaw, songs, users) = inParallel(Seq(
-      () => stageStreams(spark, cfg, obs),
+    // 1 — validation job (the stream files not staged yet → quarantine
+    // → clean rows appended to the staged history, S6) and both
+    // dimension loads, at once. The staged row count rides the write via
+    // `observe()`: no second pass over the inputs just for logging (SURVEY
+    // §4.3: the reference re-runs count() eagerly at 8+ sites).
+    val streams = s"${cfg.stagingDir}/streams"
+    var stagedRows = 0L
+    val Seq(staged, songs, users) = inParallel(Seq(
+      () => {
+        stagedRows = Validator.stageStreams(spark, cfg.streamFiles, streams,
+          cfg.quarantineDir)(Validator.readStreams(spark, _))
+        ParquetIO.read(spark, streams)
+      },
       () => loadDim(spark, cfg.songsCsv, s"${cfg.stagingDir}/songs",
         s"${cfg.stagingDir}/ledger/songs.md5"),
       () => loadDim(spark, cfg.usersCsv, s"${cfg.stagingDir}/users",
         s"${cfg.stagingDir}/ledger/users.md5")))
-    val stagedRows = obs.get("rows").asInstanceOf[Long]
 
     // 2+3 — KPI and serve over the FULL staged history (reference
-    // semantics), one chain per KPI, all over one persisted enrichment;
-    // dedupStagedStreams makes double-staged files harmless (SURVEY §7.4.6)
-    val staged =
-      if (cfg.dedupStagedStreams) Validator.dedupStreams(stagedRaw) else stagedRaw
+    // semantics), one chain per KPI, all over one persisted enrichment
     val enriched = KpiQueries.persistEnriched(
       KpiQueries.prepareStreamingData(staged, songs, users))
     try {

@@ -85,7 +85,8 @@ object KpiSink {
     * closures (local mode shares the JVM) and the DSv2 reader
     * ([[KvDataSource]], which opens the store by id) all reach the same
     * rows. Items enter through `putBatch`, which [[KpiSink.write]] calls
-    * once per batch; there is no other write path.
+    * once per batch; there is no other write path. A store's state lives
+    * until [[drop]] removes it from the registry.
     *
     * The read side models the reference table's access patterns
     * (`docs/dynamodb-queries.md:42-101`, GSIs declared at
@@ -107,7 +108,12 @@ object KpiSink {
       InMemoryKvStore.states.put(id, new State(throttleFirstN))
     }
 
-    private def state: State = InMemoryKvStore.states.get(id)
+    private def state: State = InMemoryKvStore.state(id)
+
+    /** Free the store: its state leaves the registry, and every later
+      * call on it, or `open` of its id, fails as for an unknown store id.
+      */
+    def drop(): Unit = InMemoryKvStore.states.remove(id)
 
     def putBatch(items: Seq[Item]): Unit = {
       require(items.size <= BatchSize, s"batch of ${items.size} exceeds $BatchSize")
@@ -185,6 +191,11 @@ object KpiSink {
     /** Full scan (`docs/dynamodb-queries.md:28-30,108-111`). */
     def scanAll(): Seq[Item] =
       served("Scan").rows.asScala.iterator.toSeq.sortBy(_._1).map(_._2)
+
+    /** Every item, in no order, recording no access pattern: for the
+      * DSv2 reader's schema inference, which is not a read of the table.
+      */
+    private[serve] def items: Iterator[Item] = state.rows.values.iterator.asScala
   }
 
   object InMemoryKvStore {
@@ -240,9 +251,15 @@ object KpiSink {
     // visible across its serialized handle copies
     private val states = new ConcurrentHashMap[String, State]()
 
+    private def state(storeId: String): State = {
+      val st = states.get(storeId)
+      require(st != null, s"unknown store id $storeId — create the InMemoryKvStore first")
+      st
+    }
+
     /** The store a DSv2 read names by id. */
     private[serve] def open(storeId: String): InMemoryKvStore = {
-      require(states.containsKey(storeId), s"unknown store id $storeId — create the InMemoryKvStore first")
+      state(storeId)
       new InMemoryKvStore(storeId)
     }
   }

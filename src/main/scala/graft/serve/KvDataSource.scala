@@ -65,25 +65,37 @@ object KvDataSource {
   val Format: String = classOf[KvDataSource].getName
 
   /** Item-map → relational schema: the union of attribute names across
-    * items, typed from the first non-null value seen. Numbers read back
-    * as DOUBLE (items store `BigDecimal(str(x))`, the engine-side
-    * origin of every KPI value is a double); `id`/`timestamp` lead.
+    * items, each typed by the values it holds. Numbers read back as
+    * DOUBLE (items store `BigDecimal(str(x))`, the engine-side origin of
+    * every KPI value is a double); an attribute whose values disagree
+    * takes the wider type (INT and BIGINT → BIGINT, other numbers →
+    * DOUBLE, anything else → STRING), so the result does not depend on
+    * the order items are visited in. `id`/`timestamp` lead, the rest
+    * sorted. One unordered pass over the items, which records no access
+    * pattern on the store.
     */
   private[serve] def inferStoreSchema(storeId: String): StructType = {
-    val items = KpiSink.InMemoryKvStore.open(storeId).scanAll()
-    val types = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    items.foreach(_.foreach { case (k, v) =>
-      if (!types.contains(k)) types(k) = v match {
+    val types = scala.collection.mutable.Map[String, DataType]()
+    KpiSink.InMemoryKvStore.open(storeId).items.foreach(_.foreach { case (k, v) =>
+      val t: DataType = v match {
         case _: BigDecimal | _: java.math.BigDecimal | _: Double | _: Float => DoubleType
         case _: Int     => IntegerType
         case _: Long    => LongType
         case _: Boolean => BooleanType
         case _          => StringType
       }
+      types(k) = types.get(k).fold(t)(widen(_, t))
     })
     val keys = Seq("id", "timestamp").filter(types.contains)
     val rest = types.keys.toSeq.filterNot(keys.contains).sorted
     StructType((keys ++ rest).map(n => StructField(n, types(n), nullable = true)))
+  }
+
+  private def widen(a: DataType, b: DataType): DataType = (a, b) match {
+    case _ if a == b => a
+    case (IntegerType | LongType, IntegerType | LongType) => LongType
+    case (IntegerType | LongType | DoubleType, IntegerType | LongType | DoubleType) => DoubleType
+    case _ => StringType
   }
 
   /** Which native access pattern a pushed filter set resolved to. */

@@ -4,11 +4,11 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{element_at, input_file_name, split}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.io.{CsvSource, ParquetIO, PathUtil}
+import graft.io.{CsvSource, PathUtil}
 import graft.model.Schemas
 import graft.validate.Validator
 
@@ -22,8 +22,11 @@ import graft.validate.Validator
   * second run discovers only new ones, and `Trigger.AvailableNow`
   * gives batch-job semantics (drain everything currently available,
   * then stop) — so re-runs are exactly the reference's "process only
-  * new files" contract, with exactly-once file accounting handled by
-  * the engine instead of hand-rolled JSON.
+  * new files" contract, with file accounting handled by the engine
+  * instead of hand-rolled JSON. Staging itself is exactly-once per file
+  * through [[graft.validate.Validator.stageStreams]], the batch job's own
+  * staging: a micro-batch re-run after its rows were staged (a crash
+  * between the staging commit and the checkpoint's) stages nothing twice.
   *
   * At scale the source lists the input directory per trigger;
   * `maxFilesPerTrigger` bounds one micro-batch, and
@@ -65,14 +68,17 @@ object IncrementalIngest {
   /** One incremental validation run: drain all currently-available new
     * files through clean-streams validation into an append-mode parquet
     * staging dir, then return the number of micro-batches executed.
-    * Idempotent across re-runs via `checkpoint`.
+    * Idempotent across re-runs via `checkpoint`, and across a re-run
+    * micro-batch via the staged rows' own `_source_file`.
     *
-    * Corrupt rows (S7): each micro-batch goes through the batch ingest's
-    * own split, [[graft.validate.Validator.splitStreams]] — with
-    * `quarantineDir` set, rows whose raw line failed the schema parse are
-    * appended as JSON under `<quarantineDir>/corrupt_records/` with their
-    * `_source_file` (`scripts/validate_data.py:121-129` semantics); only
-    * clean rows reach staging.
+    * Each micro-batch is staged by the batch job's own staging,
+    * [[graft.validate.Validator.stageStreams]], over the batch's files:
+    * one already staged under `stagingDir` (by a run of this or by
+    * `PipelineJob.run`) is skipped. With `quarantineDir` set, rows whose
+    * raw line failed the schema parse are appended as JSON under
+    * `<quarantineDir>/corrupt_records/` with their `_source_file`
+    * (`scripts/validate_data.py:121-129` semantics); only clean rows reach
+    * staging.
     *
     * Ledger migration: `processedLedger` points at a reference-style
     * `processed_streams.json`; files it records as completed are excluded
@@ -83,14 +89,6 @@ object IncrementalIngest {
     * The skip set is a small driver-side literal (file names); a ledger
     * with millions of entries should be compacted into the checkpoint
     * offline instead.
-    *
-    * Exactly-once note: the `foreachBatch` split means a batch retried
-    * after a partial staging write can duplicate rows (the single-sink
-    * parquet file log's transactionality doesn't extend across two
-    * sinks). Staged history is re-run-safe downstream only where the
-    * reader dedups it with [[graft.validate.Validator.dedupStreams]]:
-    * `PipelineJob.run` does so when `Config.dedupStagedStreams` is set,
-    * and that flag defaults to false.
     */
   def runAvailableNow(spark: SparkSession, inputDir: String, stagingDir: String,
                       checkpoint: String, quarantineDir: Option[String] = None,
@@ -110,8 +108,15 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batches.incrementAndGet()
-        val (clean, parse) = Validator.splitStreams(batch, quarantineDir)
-        try ParquetIO.writeAppend(clean, staging) finally parse.unpersist()
+        // the sink hands over the batch as an RDD (`inputFiles` is empty),
+        // so its files are read off the batch itself: one light pass
+        val files = batch.select(input_file_name()).distinct().as(Encoders.STRING).collect().toSeq
+        if (files.nonEmpty)
+          Validator.stageStreams(spark, files, staging, quarantineDir) { fresh =>
+            if (fresh.size == files.size) batch
+            else batch.filter(input_file_name().isin(fresh: _*))
+          }
+        ()
       }
       .start()
     q.awaitTermination()

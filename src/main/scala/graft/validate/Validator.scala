@@ -1,9 +1,13 @@
 package graft.validate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import java.net.URI
 
-import graft.io.{CsvSource, ParquetIO, PathUtil}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.io.{CsvSource, FsUtil, ParquetIO, PathUtil}
 import graft.model.Schemas
 
 /** The validation/ingest job — the reference's most-executed code path
@@ -15,8 +19,16 @@ import graft.model.Schemas
   * single task set however many files there are, where the reference
   * loops over the files (no shuffle anywhere in this job: cleaning is
   * per-row). The only materialization is that scan's cached parse, which
-  * serves both the quarantine and the clean branch ([[splitStreams]]),
-  * instead of the reference's double read+count.
+  * serves both the quarantine and the clean branch, instead of the
+  * reference's double read+count.
+  *
+  * Exactly-once staging: [[stageStreams]] is the one way stream rows reach
+  * staging, for `graft.pipeline.PipelineJob` and for each micro-batch of
+  * `graft.streaming.IncrementalIngest`. Every staged row keeps the
+  * `_source_file` it was parsed from, so the staged rows are their own
+  * ledger: a file is recorded as staged by the same write job commit that
+  * stages its rows, and a re-run, a retried micro-batch or a file listed
+  * twice never stages it again.
   */
 object Validator {
 
@@ -76,72 +88,118 @@ object Validator {
             s" (expected ${d.expected}, got ${d.actual})" else "")).mkString("; "))
   }
 
-  /** P3+P5 — cast projection + any-null row rejection
-    * (`scripts/validate_data.py:135-139`).
+  /** The column that names, on every staged and quarantined stream row,
+    * the file the row was parsed from, as `input_file_name()` reports it
+    * (the form [[graft.io.FsUtil.fileUri]] gives).
     */
-  def cleanStreams(df: DataFrame): DataFrame =
-    df.select(
+  val SourceFileCol = "_source_file"
+
+  /** P3+P5 — cast projection + any-null row rejection
+    * (`scripts/validate_data.py:135-139`). The `carry` columns ride along
+    * unchanged and take no part in the null check.
+    */
+  def cleanStreams(df: DataFrame, carry: String*): DataFrame =
+    df.select(Seq(
       col("user_id").cast("string"),
       col("track_id").cast("string"),
-      col("listen_time").cast("timestamp"))
-      .na.drop()
+      col("listen_time").cast("timestamp")) ++ carry.map(col): _*)
+      .na.drop(Schemas.streams.fieldNames.toSeq)
 
   /** S1+S7+P7+P3+P5+U1 — the full streams ingest
     * (`scripts/validate_data.py:91-158`): one permissive scan over every
-    * file, split by [[splitStreams]] into the quarantine (JSON append)
-    * and the clean rows (cast, na.drop). `paths` elements may be
-    * comma-separated lists.
-    */
-  def processStreams(spark: SparkSession, paths: Seq[String],
-                     quarantinePath: Option[String] = None): DataFrame =
-    ingestStreams(spark, paths, quarantinePath)._1
-
-  /** [[processStreams]] that also returns the cached parse behind its
-    * result. The quarantine write has run when it returns; once the result
-    * is consumed too, the caller should `unpersist` the parse, which a
-    * long-lived session would otherwise keep, one per call.
+    * file, split into the quarantine (JSON append, written before this
+    * returns) and the clean rows (cast, na.drop), the three stream columns.
+    * `paths` elements may be comma-separated lists. The clean rows are
+    * served from the scan's cached parse, which stays cached.
     *
     * Each file's header must name the streams columns in order: a
     * renamed, missing or reordered column fails the scan, naming the
     * column and the file (see `CsvSource.options`).
     */
-  def ingestStreams(spark: SparkSession, paths: Seq[String],
-                    quarantinePath: Option[String]): (DataFrame, DataFrame) = {
+  def processStreams(spark: SparkSession, paths: Seq[String],
+                     quarantinePath: Option[String] = None): DataFrame = {
     val files = paths.flatMap(PathUtil.splitPaths)
     require(files.nonEmpty, "no stream files given")
-    splitStreams(CsvSource.readPermissive(spark, Schemas.streams, files, checkHeader = true),
-      quarantinePath)
+    val raw = CsvSource.readPermissive(spark, Schemas.streams, files, checkHeader = true)
+    cleanStreams(CsvSource.cleanRows(splitStreams(raw, quarantinePath)))
   }
 
-  /** The one streams split, shared by the batch ingest and each
-    * micro-batch of `graft.streaming.IncrementalIngest`: stamp every row
-    * of the permissive parse `raw` with its `_source_file`, cache it,
-    * append its corrupt rows to the quarantine under `quarantinePath`,
-    * and return (the [[cleanStreams]] rows, the cached parse). The caller
-    * releases the parse once the clean rows are consumed; if the
-    * quarantine write fails it is released here.
+  /** The permissive, header-checked parse ([[processStreams]]'s scan) of
+    * the stream files named by `uris`, in the form [[stageStreams]] hands
+    * to its `parse`.
+    */
+  def readStreams(spark: SparkSession, uris: Seq[String]): DataFrame =
+    CsvSource.readPermissive(spark, Schemas.streams,
+      uris.map(u => new Path(new URI(u)).toString), checkHeader = true)
+
+  /** Stage stream files exactly once: the one staging path, shared by
+    * `graft.pipeline.PipelineJob` and each micro-batch of
+    * `graft.streaming.IncrementalIngest`. Returns the rows staged.
+    *
+    * `files` (paths or URIs; elements may be comma-separated lists) are
+    * normalized with [[graft.io.FsUtil.fileUri]], so one file listed
+    * twice, or spelled two ways, counts once. Every file that already
+    * names staged rows under `stagedPath` is dropped before parsing; the
+    * rest go to `parse`, which returns their permissive parse. Its rows
+    * are stamped with [[SourceFileCol]], corrupt rows are appended to the
+    * quarantine under `quarantinePath`, and the clean rows are appended to
+    * `stagedPath` with the stamp. The staged rows are thus the ledger: one
+    * write job commits a file's rows and its "staged" mark together.
+    *
+    * When every file is already staged, nothing is parsed and 0 is
+    * returned. The check reads only the stamps of staged rows from the
+    * given files (an `IN` filter pushed to the parquet scan, with the
+    * staged schema declared, so no footer inference); with no staged
+    * history it is skipped.
+    */
+  def stageStreams(spark: SparkSession, files: Seq[String], stagedPath: String,
+                   quarantinePath: Option[String])(parse: Seq[String] => DataFrame): Long = {
+    val uris = files.flatMap(PathUtil.splitPaths).map(FsUtil.fileUri(spark, _)).distinct
+    require(uris.nonEmpty, "no stream files given")
+    val staged = stagedFiles(spark, stagedPath, uris)
+    val fresh = uris.filterNot(staged)
+    if (fresh.isEmpty) 0L
+    else {
+      val cached = splitStreams(parse(fresh), quarantinePath)
+      val rows = new Observation("staged_streams")
+      try ParquetIO.writeAppend(
+        cleanStreams(CsvSource.cleanRows(cached), SourceFileCol).observe(rows, count(lit(1)).as("rows")),
+        stagedPath)
+      finally cached.unpersist()
+      rows.get("rows").asInstanceOf[Long]
+    }
+  }
+
+  /** The schema of staged stream rows. */
+  private val StagedStreams: StructType =
+    StructType(Schemas.streams.fields :+ StructField(SourceFileCol, StringType))
+
+  /** Those of `uris` that name rows staged under `stagedPath`. One job of
+    * one stage: each task returns its distinct matching stamps.
+    */
+  private def stagedFiles(spark: SparkSession, stagedPath: String,
+                          uris: Seq[String]): Set[String] =
+    if (!FsUtil.exists(spark, stagedPath)) Set.empty
+    else spark.read.schema(StagedStreams).parquet(PathUtil.cleanPath(stagedPath))
+      .select(SourceFileCol).filter(col(SourceFileCol).isin(uris: _*))
+      .as(Encoders.STRING).mapPartitions(_.distinct)(Encoders.STRING)
+      .collect().toSet
+
+  /** Stamp every row of the permissive parse `raw` with its
+    * [[SourceFileCol]], cache it, append its corrupt rows to the
+    * quarantine under `quarantinePath`, and return the cached parse. If
+    * the quarantine write fails the parse is released here.
     *
     * The stamp is taken before the cache: over a cached relation
     * `input_file_name()` reads `""`, so it must be evaluated by the scan.
     */
-  def splitStreams(raw: DataFrame, quarantinePath: Option[String]): (DataFrame, DataFrame) = {
-    val parse = raw.withColumn("_source_file", input_file_name()).cache()
+  private def splitStreams(raw: DataFrame, quarantinePath: Option[String]): DataFrame = {
+    val parse = raw.withColumn(SourceFileCol, input_file_name()).cache()
     try quarantinePath.foreach(
       ParquetIO.quarantineJson(parse.filter(col(CsvSource.CorruptCol).isNotNull), _))
     catch { case e: Throwable => parse.unpersist(); throw e }
-    (cleanStreams(CsvSource.cleanRows(parse)), parse)
+    parse
   }
-
-  /** Idempotency guard for the append-mode staging boundary (SURVEY
-    * §7.4.6): the reference appends streams per run and relies on an
-    * external ledger to avoid double-counting; re-staging the same file
-    * would silently double every KPI. Exact-row dedup on the full
-    * (user_id, track_id, listen_time) key makes the staged history
-    * re-run-safe — at scale this is one hash aggregation, and with the
-    * staging table bucketed by `user_id` it doesn't even shuffle.
-    */
-  def dedupStreams(staged: DataFrame): DataFrame =
-    staged.dropDuplicates(Seq("user_id", "track_id", "listen_time"))
 
   /** Reference-data ingest with content-based dispatch
     * (`scripts/validate_data.py:219-249`): a file whose header names
@@ -168,13 +226,20 @@ object Validator {
     // The presence check runs against the FILE's header — a declared
     // read schema would mask missing columns with all-null fields.
     val header = spark.read.option("header", "true")
-      .csv(PathUtil.cleanPath(path)).schema.fieldNames.toSet
+      .csv(PathUtil.cleanPath(path)).schema.fieldNames.toSeq
     val (schema, required, ctx) =
       if (header.contains("track_id")) (Schemas.songs, Schemas.requiredSongsColumns, "songs")
       else (Schemas.users, Schemas.requiredUsersColumns, "users")
-    validateColumnSet(header, required, ctx)
-    if (cached) CsvSource.readSplit(spark, schema, Seq(path))._1
-    else CsvSource.cleanRows(CsvSource.readPermissive(spark, schema, Seq(path)))
+    validateColumnSet(header.toSet, required, ctx)
+    // The read is positional, so the read schema follows the file's own
+    // column order, each declared column with its declared type (any
+    // other column as a string); the declared order is selected after.
+    val declared = schema.fields.map(f => f.name -> f).toMap
+    val bySource = StructType(header.map(n => declared.getOrElse(n, StructField(n, StringType))))
+    val rows =
+      if (cached) CsvSource.readSplit(spark, bySource, Seq(path))._1
+      else CsvSource.cleanRows(CsvSource.readPermissive(spark, bySource, Seq(path)))
+    rows.select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** Schema-evolution union: fold frames written under DIFFERENT

@@ -24,3 +24,19 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   def causeMessages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 }
+
+/** Hands out KV stores that are dropped after each test, so a suite's
+  * stores do not outlive it in the JVM-wide registry.
+  */
+trait KvStores extends org.scalatest.BeforeAndAfterEach { this: org.scalatest.Suite =>
+  private val made = scala.collection.mutable.ArrayBuffer.empty[graft.serve.KpiSink.InMemoryKvStore]
+
+  def newStore(throttleFirstN: Int = 0): graft.serve.KpiSink.InMemoryKvStore = {
+    val store = new graft.serve.KpiSink.InMemoryKvStore(throttleFirstN)
+    made += store
+    store
+  }
+
+  override def afterEach(): Unit =
+    try { made.foreach(_.drop()); made.clear() } finally super.afterEach()
+}

@@ -7,6 +7,20 @@ import graft.SparkSpec
 class IoSpec extends SparkSpec {
   import spark.implicits._
 
+  test("FsUtil.fileUri names a file as input_file_name() does, however it is spelled") {
+    val dir = tmpDir("fileuri")
+    val f = s"$dir/streams a.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(f), "x\n")
+    val scanned = spark.read.text(f).select(input_file_name()).as[String].head()
+    for (spelling <- Seq(f, f.replace("/streams", "//streams"), s"file://$f",
+                         new java.io.File(f).toURI.toString, scanned))
+      withClue(s"$spelling: ") { FsUtil.fileUri(spark, spelling) shouldBe scanned }
+    // a relative path resolves against the working directory
+    val rel = "fixtures/users.csv"
+    FsUtil.fileUri(spark, rel) shouldBe
+      spark.read.text(rel).select(input_file_name()).as[String].head()
+  }
+
   test("ParquetIO round-trips overwrite and append modes") {
     val dir = tmpDir("pq") + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")

@@ -152,33 +152,6 @@ class DedupSpec extends SparkSpec {
     p15._4 shouldBe "new_corpus"
   }
 
-  test("withIncrementalNearDupPairs: long session accumulates NO cached frames") {
-    spark.sharedState.cacheManager.clearCache()
-    // compare RDD id SETS, not counts: the ContextCleaner may unpersist a
-    // PREVIOUS suite's stranded checkpoint mid-test (count would drop and
-    // a count equality would flake); what this test owns is "no NEW
-    // persistent RDD survives the bracket"
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val store = Dedup.dedupStore(docs.filter($"doc_id" <= 3), "doc_id", "text")
-    // a "daily driver": many batches through the bracketed API — each
-    // consume materializes, and the bracket owns the unpersist
-    val results = (1 to 4).map { _ =>
-      Dedup.withIncrementalNearDupPairs(
-        docs.filter($"doc_id" >= 4), store, "doc_id", "text", n = 3, tau = 0.5) { df =>
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
-    }
-    results.distinct.size shouldBe 1 // batches see identical answers
-    results.head should contain ((1L, 5L))
-    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
-    // …and the bracket unpersists even when consume throws
-    intercept[RuntimeException] {
-      Dedup.withIncrementalNearDupPairs(
-        docs.filter($"doc_id" >= 4), store, "doc_id", "text")(_ => sys.error("boom"))
-    }
-    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
-  }
-
   test("incremental dedup tolerates a re-submitted doc present in batch AND store") {
     val store = Dedup.dedupStore(docs, "doc_id", "text") // store has everything
     val inc = Dedup.incrementalNearDupPairs(

@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.RDDBlockId
 
-import graft.SparkSpec
+import graft.{KvStores, SparkSpec}
 import graft.io.ParquetIO
 import graft.kpi.KpiQueries
 import graft.serve.{KpiItems, KpiSink, KvDataSource}
+import graft.streaming.IncrementalIngest
 
 object PipelineSpec {
   /** A store that fails every batch carrying one `kpi_type`, with an
@@ -29,7 +30,7 @@ object PipelineSpec {
   }
 }
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with KvStores {
 
   private val fixtures = graft.SparkEntry.FixturesDir
 
@@ -45,7 +46,7 @@ class PipelineSpec extends SparkSpec {
       outputDir = s"$base/out",
       quarantineDir = Some(s"$base/quarantine"),
       runTs = "2024-07-01T00:00:00")
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
     val r1 = PipelineJob.run(spark, cfg, Some(store))
 
     r1.stagedStreamRows shouldBe 71
@@ -62,28 +63,68 @@ class PipelineSpec extends SparkSpec {
     // the staged dim the only readable source of truth:
     val songsStagedMtime = new java.io.File(s"$base/staging/songs").lastModified()
     val r2 = PipelineJob.run(spark, cfg, None)
-    // streams staged twice (append semantics — ledger gating is the
-    // incremental module's job), so KPI inputs doubled:
-    r2.stagedStreamRows shouldBe 71
+    // both stream files are staged already: nothing is staged twice
+    r2.stagedStreamRows shouldBe 0
+    r2.kpiRows shouldBe r1.kpiRows
     new java.io.File(s"$base/staging/songs").lastModified() shouldBe songsStagedMtime
   }
 
-  test("dedupStagedStreams makes a double-staged run KPI-identical to a single run") {
-    val base = tmpDir("pipe3")
-    def cfg(out: String, staging: String) = PipelineJob.Config(
-      streamFiles = Seq(s"$fixtures/streams_a.csv"),
-      songsCsv = s"$fixtures/songs.csv",
-      usersCsv = s"$fixtures/users.csv",
-      stagingDir = s"$base/$staging",
-      outputDir = s"$base/$out",
-      dedupStagedStreams = true)
-    PipelineJob.run(spark, cfg("once", "s1"))
-    // stage the same file twice into a second pipeline, dedup on
-    PipelineJob.run(spark, cfg("twice", "s2"))
-    PipelineJob.run(spark, cfg("twice", "s2"))
-    val a = spark.read.parquet(s"$base/once/user_kpis").collect().map(_.toSeq).toSet
-    val b = spark.read.parquet(s"$base/twice/user_kpis").collect().map(_.toSeq).toSet
-    b shouldBe a
+  test("a second run over the same files stages nothing and leaves the KPIs unchanged") {
+    val cfg = fixtureConfig(tmpDir("pipe_rerun"))
+    val r1 = PipelineJob.run(spark, cfg)
+    val once = kpiTables(cfg)
+    val r2 = PipelineJob.run(spark, cfg)
+    r2.stagedStreamRows shouldBe 0
+    r2.kpiRows shouldBe r1.kpiRows
+    kpiTables(cfg) shouldBe once
+    spark.read.json(s"${cfg.quarantineDir.get}/corrupt_records").count() shouldBe 4
+  }
+
+  test("a run that failed in the sink, re-run, equals a clean run") {
+    val clean = fixtureConfig(tmpDir("pipe_clean"))
+    val cleanStore = newStore()
+    val want = PipelineJob.run(spark, clean, Some(cleanStore))
+
+    // the first attempt stages the streams and writes KPIs, then fails
+    val cfg = fixtureConfig(tmpDir("pipe_crash"))
+    intercept[Exception] {
+      PipelineJob.run(spark, cfg, Some(new PipelineSpec.FailingStore("genre_top")))
+    }
+    val store = newStore()
+    val r = PipelineJob.run(spark, cfg, Some(store))
+    r.stagedStreamRows shouldBe 0
+    r.kpiRows shouldBe want.kpiRows
+    r.servedItems shouldBe want.servedItems
+    kpiTables(cfg) shouldBe kpiTables(clean)
+    store.scanAll().toSet shouldBe cleanStore.scanAll().toSet
+  }
+
+  test("a file IncrementalIngest staged is not staged again by the batch job") {
+    val base = tmpDir("pipe_incr")
+    val in = s"$base/in"
+    new java.io.File(in).mkdirs()
+    val files = Seq("streams_a.csv", "streams_b.csv")
+    files.foreach(f => Files.copy(Paths.get(s"$fixtures/$f"), Paths.get(s"$in/$f")))
+    val cfg = fixtureConfig(base).copy(streamFiles = files.map(f => s"$in/$f"))
+    IncrementalIngest.runAvailableNow(spark, in, s"${cfg.stagingDir}/streams", s"$base/ckpt")
+
+    val clean = fixtureConfig(tmpDir("pipe_incr_clean"))
+    val want = PipelineJob.run(spark, clean)
+    val r = PipelineJob.run(spark, cfg)
+    r.stagedStreamRows shouldBe 0
+    r.kpiRows shouldBe want.kpiRows
+    kpiTables(cfg) shouldBe kpiTables(clean)
+  }
+
+  test("a file listed twice, or spelled two ways, is staged once") {
+    val a = s"$fixtures/streams_a.csv"
+    val once = PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_once"))
+      .copy(streamFiles = Seq(a)))
+    val twice = PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_twice"))
+      .copy(streamFiles = Seq(s"$a,$a", a.replace("/fixtures/", "//fixtures/"),
+        "fixtures/streams_a.csv")))
+    twice.stagedStreamRows shouldBe once.stagedStreamRows
+    twice.kpiRows shouldBe once.kpiRows
   }
 
   test("deskewTrending flag routes through the bucketed plan with equal output") {
@@ -106,9 +147,9 @@ class PipelineSpec extends SparkSpec {
     // the counter is JVM-global: forked suites run one at a time, and the
     // first run below fills the codegen cache with the whole working set
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
-    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cold")), Some(new KpiSink.InMemoryKvStore()))
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cold")), Some(newStore()))
     val before = compiled.getCount
-    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_warm")), Some(new KpiSink.InMemoryKvStore()))
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_warm")), Some(newStore()))
     (compiled.getCount - before) shouldBe 0L
   }
 
@@ -130,8 +171,15 @@ class PipelineSpec extends SparkSpec {
   private def rows(df: DataFrame): Map[Row, Int] =
     df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
 
+  /** Every KPI table a run of `cfg` wrote, as row multisets. */
+  private def kpiTables(cfg: PipelineJob.Config): Map[String, Map[Row, Int]] =
+    KpiChainNames.map(n => n -> rows(spark.read.parquet(s"${cfg.outputDir}/$n"))).toMap
+
+  private val KpiChainNames = Seq("user_kpis", "genre_daily_metrics_kpi",
+    "genre_top_songs_kpi", "genre_top_genres_kpi", "trending_kpis")
+
   test("served items read back through the KV data source, one KpiTypeIndex read per KPI table") {
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
     val r = PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_read")), Some(store))
     val kv = spark.read.format(KvDataSource.Format).option("store", store.id).load()
     val tables = Seq("user" -> "user_kpis", "genre_daily" -> "genre_daily_metrics_kpi",
@@ -159,7 +207,7 @@ class PipelineSpec extends SparkSpec {
   test("a run releases every cache it made: stream parses and the enrichment") {
     spark.catalog.clearCache()
     val before = persistedRdds
-    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cache")), Some(new KpiSink.InMemoryKvStore()))
+    PipelineJob.run(spark, fixtureConfig(tmpDir("pipe_cache")), Some(newStore()))
     spark.sharedState.cacheManager.isEmpty shouldBe true
     (persistedRdds -- before) shouldBe empty
     branchThreadsAlive shouldBe false
@@ -186,7 +234,7 @@ class PipelineSpec extends SparkSpec {
   test("concurrent run equals the KPI queries and item projections run one at a time") {
     val base = tmpDir("pipe_eq")
     val cfg = fixtureConfig(base)
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
 
     // every job of the run carries the caller's job group, and the
     // persisted enrichment's blocks are each filled once

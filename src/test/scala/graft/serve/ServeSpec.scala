@@ -2,14 +2,14 @@ package graft.serve
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{KvStores, SparkSpec}
 import graft.kpi.KpiQueries
 
 object DelayCapture {
   val delays = new java.util.concurrent.CopyOnWriteArrayList[Long]()
 }
 
-class ServeSpec extends SparkSpec {
+class ServeSpec extends SparkSpec with KvStores {
   import spark.implicits._
 
   private val runTs = "2024-07-01T00:00:00"
@@ -53,7 +53,7 @@ class ServeSpec extends SparkSpec {
   }
 
   test("sink batches at 25 and applies overwrite-by-pkeys") {
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
     val items = (1 to 60).map(i => (s"ID_$i", runTs, i)).toDF("id", "timestamp", "v")
       .coalesce(1)
     KpiSink.write(items, store)
@@ -66,7 +66,7 @@ class ServeSpec extends SparkSpec {
   }
 
   test("sink retries throttled batches with exponential backoff then succeeds") {
-    val store = new KpiSink.InMemoryKvStore(throttleFirstN = 3)
+    val store = newStore(throttleFirstN = 3)
     DelayCapture.delays.clear()
     val items = (1 to 5).map(i => (s"ID_$i", runTs)).toDF("id", "timestamp").coalesce(1)
     // the sleep closure runs on executors; DelayCapture is a JVM singleton
@@ -78,7 +78,7 @@ class ServeSpec extends SparkSpec {
   }
 
   test("sink gives up after maxRetries") {
-    val store = new KpiSink.InMemoryKvStore(throttleFirstN = 100)
+    val store = newStore(throttleFirstN = 100)
     val items = Seq(("A", runTs)).toDF("id", "timestamp").coalesce(1)
     val e = intercept[Exception] {
       KpiSink.write(items, store, sleep = _ => ())
@@ -92,7 +92,7 @@ class ServeSpec extends SparkSpec {
   // ------------------------------------------------------------------
 
   private def readStore(): KpiSink.InMemoryKvStore = {
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
     store.putBatch(Seq(
       Map("id" -> "USER_ENGAGEMENT_20240101", "timestamp" -> "2024-01-01T00:00:00",
         "kpi_type" -> "user_engagement", "value" -> BigDecimal("10.5")),
@@ -204,8 +204,30 @@ class ServeSpec extends SparkSpec {
     store.lastReadPattern shouldBe "KpiTypeIndex"
   }
 
+  test("DSv2 schema inference is not a read: a schema-only load keeps the access pattern") {
+    val store = readStore()
+    store.getItem("USER_ENGAGEMENT_20240101", "2024-01-01T00:00:00")
+    store.lastReadPattern shouldBe "GetItem"
+    val schema = spark.read.format(KvDataSource.Format).option("store", store.id).load().schema
+    schema.fieldNames.toSeq shouldBe Seq("id", "timestamp", "date", "genre", "kpi_type", "value")
+    store.lastReadPattern shouldBe "GetItem"
+  }
+
+  test("drop frees a store: a later open or use fails as an unknown store id") {
+    val store = readStore()
+    store.drop()
+    val load = intercept[Exception] {
+      spark.read.format(KvDataSource.Format).option("store", store.id).load()
+    }
+    causeMessages(load) should include(s"unknown store id ${store.id}")
+    intercept[IllegalArgumentException](store.size).getMessage should include("unknown store id")
+    intercept[IllegalArgumentException] {
+      KpiSink.InMemoryKvStore.open(store.id)
+    }.getMessage should include("unknown store id")
+  }
+
   test("DSv2 read: written items round-trip through the read path") {
-    val store = new KpiSink.InMemoryKvStore()
+    val store = newStore()
     val items = (1 to 40).map(i =>
       (f"KPI_$i%03d", runTs, "demo_kpi", i.toDouble))
       .toDF("id", "timestamp", "kpi_type", "value")

@@ -46,6 +46,20 @@ class IncrementalIngestSpec extends SparkSpec {
     rows.select("user_id").as[String].collect().toSet shouldBe Set("u1", "u2", "u4")
   }
 
+  test("a micro-batch re-run after its rows were staged stages nothing twice") {
+    val base = tmpDir("incr_retry")
+    val in = s"$base/in"; new java.io.File(in).mkdirs()
+    val staging = s"$base/staging"; val ckpt = s"$base/ckpt"
+    writeCsv(s"$in/s1.csv", Seq("u1,t1,2024-06-25 10:00:00", "u2,t2,2024-06-25 11:00:00"))
+    IncrementalIngest.runAvailableNow(spark, in, staging, ckpt) shouldBe 1
+    // a crash after the staging commit, before the checkpoint's: the
+    // batch's offsets are logged but its commit is not, so the restart
+    // runs batch 0 again over the same file
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(Paths.get(s"$ckpt/commits/$f")))
+    IncrementalIngest.runAvailableNow(spark, in, staging, ckpt) shouldBe 1
+    spark.read.parquet(staging).count() shouldBe 2
+  }
+
   test("a fresh checkpoint reprocesses from scratch (ledger reset semantics)") {
     val base = tmpDir("incr2")
     val in = s"$base/in"; new java.io.File(in).mkdirs()
@@ -95,7 +109,12 @@ class IncrementalIngestSpec extends SparkSpec {
     IncrementalIngest.runAvailableNow(spark, in, s"$base/staging", s"$base/ckpt", Some(q2))
 
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-    rows(spark.read.parquet(s"$base/staging")) shouldBe rows(batch)
+    val staged = spark.read.parquet(s"$base/staging")
+    rows(staged.drop(Validator.SourceFileCol)) shouldBe rows(batch)
+    // each staged row names its file as the batch scan does
+    import spark.implicits._
+    staged.select(Validator.SourceFileCol).distinct().as[String].collect().sorted shouldBe
+      files.map(f => graft.io.FsUtil.fileUri(spark, s"$in/$f"))
     // the quarantine's `_corrupt_record` field is data here, not the JSON
     // reader's own corrupt-record column; the source file by base name
     def quarantined(dir: String) = rows(spark.read

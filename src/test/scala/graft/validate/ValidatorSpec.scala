@@ -60,6 +60,60 @@ class ValidatorSpec extends SparkSpec {
     users.filter(col("user_age").isNull).count() shouldBe 1
   }
 
+  test("reference CSVs are read by column name: a reordered file stages the canonical rows") {
+    val dir = tmpDir("reorderedref")
+    for (dim <- Seq("songs", "users")) withClue(s"$dim: ") {
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$fixtures/$dim.csv")).toArray(Array.empty[String]).toSeq
+      // reverse every line's fields (the fixtures quote no field): for
+      // users this swaps user_name and user_country, both strings
+      val reordered = s"$dir/$dim.csv"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(reordered),
+        lines.map(_.split(",", -1).reverse.mkString(",")).mkString("", "\n", "\n"))
+      Validator.stageReferenceData(spark, s"$fixtures/$dim.csv", s"$dir/canonical_$dim")
+      Validator.stageReferenceData(spark, reordered, s"$dir/staged_$dim")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        (df.columns.toSeq, df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
+      val want = rows(spark.read.parquet(s"$dir/canonical_$dim"))
+      rows(spark.read.parquet(s"$dir/staged_$dim")) shouldBe want
+      rows(Validator.processReferenceData(spark, reordered)) shouldBe want
+    }
+  }
+
+  test("stageStreams stages each file once and parses no staged file") {
+    val dir = tmpDir("stagestreams")
+    val staged = s"$dir/staged"
+    val (a, b) = (s"$fixtures/streams_a.csv", s"$fixtures/streams_b.csv")
+    val parseAll = (uris: Seq[String]) => Validator.readStreams(spark, uris)
+    val nA = Validator.stageStreams(spark, Seq(s"$a,$a"), staged, None)(parseAll)
+    nA shouldBe Validator.processStreams(spark, Seq(a)).count()
+
+    // a file already staged, spelled another way, is dropped before parsing
+    val parsed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val nB = Validator.stageStreams(spark, Seq(a.replace("/fixtures/", "//fixtures/"), b),
+      staged, None) { uris => parsed ++= uris; parseAll(uris) }
+    parsed.toSeq shouldBe Seq(graft.io.FsUtil.fileUri(spark, b))
+    nB shouldBe Validator.processStreams(spark, Seq(b)).count()
+    spark.read.parquet(staged).count() shouldBe nA + nB
+
+    // all staged: no parse, 0 rows, and the check is one job
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val n = try Validator.stageStreams(spark, Seq(a, b), staged, None)(_ => fail("parsed a staged file"))
+    finally {
+      org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    n shouldBe 0L
+    jobs.get shouldBe 1
+  }
+
   test("cleanStreams casts and rejects any-null rows") {
     import spark.implicits._
     val df = Seq(
