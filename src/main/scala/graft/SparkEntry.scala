@@ -338,13 +338,16 @@ object SparkEntry {
       math.max(5L, table(s, dir, "documents").count() / 100L).toInt)
 
   /** Committed CSV fixtures (reference-data samples + crafted corrupt
-    * rows) exercising the ingest module: the checkout's `fixtures/`,
-    * resolved against the working directory (run from the repository
-    * root; sbt forks tests and `run` there). Absolute because a record's
-    * `build` receives only the testdata dir and its oracle SQL embeds the
-    * path.
+    * rows) exercising the ingest module, relative to the checkout root:
+    * the oracle SQL names them so (`tools/check.py` resolves the path
+    * against its own checkout), and `oracle_sql.json` is the same from
+    * every checkout.
     */
-  val FixturesDir: String = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
+  val FixturesRelDir = "fixtures"
+
+  /** [[FixturesRelDir]], absolute, resolved against the working directory
+    * (the repository root: sbt forks tests and `run` there). */
+  val FixturesDir: String = java.nio.file.Paths.get(FixturesRelDir).toAbsolutePath.toString
 
   /** Fixed run timestamp for the serve-stage entries (the reference uses
     * `datetime.now().isoformat()` per load run; pinned for reproducible
@@ -391,10 +394,10 @@ object SparkEntry {
       // non-null field fails its declared type/format, null-padded on short
       // arity; `na.drop` maps to the not-null filters.
       s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$FixturesDir/streams_a.csv',
+         |  SELECT * FROM read_csv('$FixturesRelDir/streams_a.csv',
          |    header=true, null_padding=true, all_varchar=true)
          |  UNION ALL
-         |  SELECT * FROM read_csv('$FixturesDir/streams_b.csv',
+         |  SELECT * FROM read_csv('$FixturesRelDir/streams_b.csv',
          |    header=true, null_padding=true, all_varchar=true)
          |)
          |SELECT user_id, track_id,
@@ -407,7 +410,7 @@ object SparkEntry {
       graft.validate.Validator.processReferenceData(s, s"$FixturesDir/users.csv")
         .withColumn("created_at", date_format(col("created_at"), "yyyy-MM-dd")),
       s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$FixturesDir/users.csv',
+         |  SELECT * FROM read_csv('$FixturesRelDir/users.csv',
          |    header=true, null_padding=true, all_varchar=true)
          |)
          |SELECT user_id, user_name, TRY_CAST(user_age AS INTEGER) AS user_age,
@@ -425,7 +428,7 @@ object SparkEntry {
           round(col("tempo"), 4).as("tempo"),
           col("time_signature"), col("track_genre")),
       s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$FixturesDir/songs.csv',
+         |  SELECT * FROM read_csv('$FixturesRelDir/songs.csv',
          |    header=true, null_padding=true, all_varchar=true)
          |)
          |SELECT TRY_CAST(id AS INTEGER) AS id, track_id, track_name,
@@ -457,7 +460,7 @@ object SparkEntry {
       // makes the whole ROW corrupt (DuckDB's native typed read would
       // instead null just the field — too lenient)
       s"""WITH raw AS (
-         |  SELECT * FROM read_json('$FixturesDir/docs.jsonl',
+         |  SELECT * FROM read_json('$FixturesRelDir/docs.jsonl',
          |    format='newline_delimited',
          |    columns={doc_id: 'VARCHAR', text: 'VARCHAR',
          |             lang: 'VARCHAR', score: 'VARCHAR'},

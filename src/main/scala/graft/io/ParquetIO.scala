@@ -56,11 +56,14 @@ object ParquetIO {
       .saveAsTable(table)
   }
 
-  /** Corrupt-record quarantine (S7): append raw rows as JSON under
-    * `<out>/corrupt_records/` — `scripts/validate_data.py:121-129`.
+  /** Corrupt-record quarantine (S7): raw rows as JSON under
+    * `<out>/corrupt_records/` — `scripts/validate_data.py:121-129` —
+    * partitioned by `byCol`. A write replaces the partitions it writes and
+    * keeps the others, so quarantining an input's rows a second time
+    * replaces them instead of appending them again.
     */
-  def quarantineJson(corrupt: DataFrame, outputPath: String): Unit =
+  def quarantineJson(corrupt: DataFrame, outputPath: String, byCol: String): Unit =
     if (!corrupt.isEmpty)
-      corrupt.write.mode(SaveMode.Append)
-        .json(PathUtil.cleanPath(s"$outputPath/corrupt_records/"))
+      corrupt.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy(byCol).json(PathUtil.cleanPath(s"$outputPath/corrupt_records/"))
 }

@@ -112,12 +112,11 @@ object Bpe {
     // can release); `words` may be a replace-chain DERIVED from it between
     // re-checkpoints — freeing `words` directly would be a no-op under
     // rddOf's root-only match and the superseded blocks would leak
-    var anchor = docs
+    var anchor = Checkpoints.stage(docs
       .select(explode(split(normalize(coalesce(col(textCol), lit(""))), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(toUnits(col("w")).as("units"), col("n"))
-      .localCheckpoint(eager = true)
+      .select(toUnits(col("w")).as("units"), col("n")))
     var words = anchor
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -147,7 +146,9 @@ object Bpe {
           col("n"))
         iter += 1
         words = if (iter % 8 == 0) {
-          val next = updated.localCheckpoint(eager = true)
+          // loop state: always materialized, or the replace chain's
+          // lineage would grow with every merge
+          val next = Checkpoints.materialize(updated)
           Checkpoints.free(anchor)
           anchor = next
           next

@@ -890,99 +890,59 @@ object Dedup {
     * one equi-join + one hash aggregation per round, converging in
     * O(component diameter) rounds (near-dup components are shallow:
     * duplicates of a page link through it, not through chains). Labels
-    * are `localCheckpoint`ed each round so the plan doesn't accumulate
-    * `maxIter` joins of lineage. Convergence detection costs NO extra
-    * job: the round's aggregation carries the previous label alongside
-    * the new minimum (the self branch of the union is tagged, so
-    * `first(label where self)` recovers it), and an `observe()` metric
-    * counts changed labels on the SAME action that materializes the
-    * checkpoint — r11 change; the previous rendering re-joined next
-    * against prev for a count() every round, a |V|-row join per round
-    * that existed only for the driver's loop condition. This is the
-    * DataFrame rendering of the classic MapReduce CC approach
+    * are materialized each round ([[Checkpoints.iterate]]) so the plan
+    * doesn't accumulate `maxIter` joins of lineage. Convergence detection
+    * costs NO extra job: the round's aggregation carries the previous
+    * label alongside the new minimum (the self branch of the union is
+    * tagged, so `first(label where self)` recovers it), and an
+    * `observe()` metric counts changed labels on the SAME action that
+    * materializes the round — r11 change; the previous rendering
+    * re-joined next against prev for a count() every round, a |V|-row
+    * join per round that existed only for the driver's loop condition.
+    * This is the DataFrame rendering of the classic MapReduce CC approach
     * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * label propagation variant); no driver-side graph state.
-    *
-    * Checkpoint hygiene: each round's label frame supersedes the last,
-    * and the superseded checkpoint's blocks are freed immediately
-    * ([[Checkpoints.free]]) — `clearCache()` can't reach them, so
-    * without this a long session strands one |V|-row RDD per round
-    * (the round-6 in-suite bench regression). The RETURNED frame keeps
-    * its final checkpoint; the caller owns those blocks.
+    * label propagation variant); no driver-side graph state. The
+    * RETURNED frame keeps its final round's blocks; the caller owns them.
     *
     * Input needs columns (`aCol`, `bCol`); output (doc_id, cluster_id),
     * one row per distinct doc appearing in any pair. Docs in no pair are
     * singletons by definition and are not emitted.
     */
   def nearDupClusters(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
-                      maxIter: Int = 25): DataFrame = {
+                      maxIter: Int = 25): DataFrame = Checkpoints.iterate { it =>
     // Both orientations via ONE explode, not a self-unionAll: the pair
     // frame is typically an unpersisted candidate-generation lineage
     // (banded LSH join + exact verify), and a unionAll of two selects
     // over it PLANS THE PAIR GENERATION TWICE — at sf0.1 that doubled
     // q_semdedup_prod's cost (the r10→r11 drift); at corpus scale it
     // doubles the dominant stage of every CC consumer.
-    val edges = pairs
+    val edges = it.persist(pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .distinct()
-      .persist()
-    var labels = edges.groupBy("src")
+      .distinct())
+    val init = edges.groupBy("src")
       .agg(least(min(col("dst")), col("src")).as("cluster_id"))
       .select(col("src").as("doc_id"), col("cluster_id"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    // try/finally: if an iteration throws (or the convergence require
-    // fires) the persisted edges RDD — and the current round's checkpoint
-    // blocks — must not outlive the call; a library caller has no handle
-    // to free them, and that is exactly the leak class Checkpoints exists
-    // to close. On success only `labels`' FINAL checkpoint survives (the
-    // caller owns those blocks).
-    try {
-      while (!converged && iter < maxIter) {
-        // neighbor minimum in one join+agg; keep own label via the union.
-        // The self branch is tagged so the agg recovers the PREVIOUS
-        // label (exactly one self row per vertex) next to the new min —
-        // the convergence signal rides the checkpoint's own job as an
-        // observe() metric instead of a separate next-vs-prev count join.
-        val viaNeighbors = edges
-          .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-          .select(col("src").as("doc_id"), col("cluster_id"),
-            lit(false).as("_self"))
-        val obs = org.apache.spark.sql.Observation()
-        val next = viaNeighbors
-          .unionAll(labels.withColumn("_self", lit(true)))
-          .groupBy("doc_id")
-          .agg(min("cluster_id").as("cluster_id"),
-            min(when(col("_self"), col("cluster_id"))).as("_prev"))
-          .observe(obs,
-            sum(when(col("cluster_id") =!= col("_prev"), 1L)
-              .otherwise(0L)).as("changed"))
-          .select(col("doc_id"), col("cluster_id"))
-          .localCheckpoint() // eager: materializes AND collects `changed`
-        // hand the new checkpoint to the cleanup path BEFORE any further
-        // job: if the metric read throws, the outer catch frees `next`'s
-        // fresh blocks (via `labels`) and the inner finally frees the
-        // superseded `prev` — nothing leaks on either path
-        val prev = labels
-        labels = next
-        try {
-          converged = obs.get("changed").asInstanceOf[Long] == 0L
-        } finally Checkpoints.free(prev)
-        iter += 1
-      }
-      require(converged, s"nearDupClusters did not converge in $maxIter rounds")
-    } catch {
-      case t: Throwable =>
-        Checkpoints.free(labels)
-        throw t
-    } finally {
-      edges.unpersist()
-    }
-    labels
+    it.until(init, maxIter, "nearDupClusters") { (labels, obs) =>
+      // neighbor minimum in one join+agg; keep own label via the union.
+      // The self branch is tagged so the agg recovers the PREVIOUS
+      // label (exactly one self row per vertex) next to the new min.
+      val viaNeighbors = edges
+        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+        .select(col("src").as("doc_id"), col("cluster_id"),
+          lit(false).as("_self"))
+      viaNeighbors
+        .unionAll(labels.withColumn("_self", lit(true)))
+        .groupBy("doc_id")
+        .agg(min("cluster_id").as("cluster_id"),
+          min(when(col("_self"), col("cluster_id"))).as("_prev"))
+        .observe(obs,
+          sum(when(col("cluster_id") =!= col("_prev"), 1L)
+            .otherwise(0L)).as("changed"))
+        .select(col("doc_id"), col("cluster_id"))
+    }(_("changed").asInstanceOf[Long] == 0L)
   }
 
   /** PassJoin-style segment-indexed edit-distance pairs — same result

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Co-occurrence graph analytics over basket-shaped data: association
@@ -364,186 +364,126 @@ object Graph {
     * Scale posture: one iteration = one equi-join of the rank frame
     * (|V| rows) against the edge list on `src` + one hash agg on `dst`
     * + one left join back to the node set — all co-partitioned on the
-    * node key after the first exchange. Ranks are `localCheckpoint`ed
-    * each round (eager), so the plan never accumulates `iters` joins of
-    * lineage and a lost executor recomputes from materialized blocks,
-    * the same discipline as [[Dedup.nearDupClusters]]. Overflow: total
-    * rank mass is ≤ 10⁶·|V| plus leak-free damping, and the one
-    * multiply is by dampingPpm ≤ 10⁶, so values stay < 2⁶³ for any
-    * |V| < ~9·10⁹ nodes.
+    * node key after the first exchange. Overflow: total rank mass is
+    * ≤ 10⁶·|V| plus leak-free damping, and the one multiply is by
+    * dampingPpm ≤ 10⁶, so values stay < 2⁶³ for any |V| < ~9·10⁹ nodes.
     *
     * Output: (node, rank_ppm) — one row per node appearing in any edge.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 3, dampingPpm: Long = 850000L): DataFrame = {
-    require(iters >= 1 && iters <= 100, "1 <= iters <= 100")
-    require(dampingPpm >= 0L && dampingPpm <= 1000000L, "dampingPpm in [0, 1e6]")
-    val basePpm = 1000000L - dampingPpm
-    // Materialize the EDGE LIST first: `e` feeds deg, nodes and eDeg, and
-    // without its own checkpoint the (possibly expensive) construction
-    // behind `edges` — a co-occurrence pair join in every registry caller
-    // — re-ran once per derived checkpoint (~2x; measured in the r13
-    // PlanTime probe: q_pagerank construction 4-7.5 s, iterations ~0).
-    // With `e` checkpointed, the derived frames are trivial re-aggs of a
-    // |E|-row leaf.
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    // node set and degree-annotated edge list are both consumed every
-    // iteration — materialize them ONCE (eager localCheckpoint) so no
-    // round re-derives them
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val eDeg = e.join(deg, Seq("src")).localCheckpoint(true)
-    var r = nodes.withColumn("rank_ppm", lit(1000000L)).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val contrib = r.join(eDeg, r("node") === eDeg("src"))
-        .select(col("dst").as("node"),
-          expr("rank_ppm div out_deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_ppm"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(basePpm) +
-            expr(s"(coalesce(in_ppm, 0L) * ${dampingPpm}L) div 1000000L"))
-            .as("rank_ppm"))
-        .localCheckpoint(true)
-      // eager checkpoint above materialized `next`; the superseded rank
-      // frame's blocks are dead weight from here — free them now rather
-      // than stranding one |V|-row RDD per iteration (see Checkpoints)
-      Checkpoints.free(r)
-      r = next
-    }
-    // the final ranks are materialized in r's own blocks; the shared
-    // edge list, node set and degree-annotated edge list are no longer
-    // referenced
-    Checkpoints.free(e)
-    Checkpoints.free(nodes)
-    Checkpoints.free(eDeg)
-    r
-  }
+               iters: Int = 3, dampingPpm: Long = 850000L): DataFrame =
+    rank(edges, srcCol, dstCol, None, iters, dampingPpm)
 
   /** Personalized PageRank — [[pageRank]] with the restart mass pinned
     * to a SEED set instead of the uniform vector: the random surfer
     * teleports only to seeds, so stationary mass measures proximity to
     * the seed set (the recommendation/expansion primitive: "what else
     * is structurally close to THESE nodes"). Same exact-ppm integer
-    * arithmetic and per-iteration checkpoint discipline as
-    * [[pageRank]]; seeds start at 1e6 ppm and receive the
-    * `1 − damping` restart each round, non-seeds accumulate only
-    * propagated mass (total mass ≈ |seeds|·1e6 — ranks are relative,
-    * as PPR's are). Output: (node, rank_ppm), every node.
+    * arithmetic; seeds start at 1e6 ppm and receive the `1 − damping`
+    * restart each round, non-seeds accumulate only propagated mass
+    * (total mass ≈ |seeds|·1e6 — ranks are relative, as PPR's are).
+    * Output: (node, rank_ppm), every node.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int = 3,
-                           dampingPpm: Long = 850000L): DataFrame = {
+                           dampingPpm: Long = 850000L): DataFrame =
+    rank(edges, srcCol, dstCol,
+      Some(seeds.filter(col(seedCol).isNotNull).select(col(seedCol).as("node")).distinct()),
+      iters, dampingPpm)
+
+  /** The rank core of [[pageRank]] and [[personalizedPageRank]]: each
+    * node's restart weight is 1 if it is a seed, else 0. With no seed set
+    * every node is a seed, the weight is the literal 1, and the plan and
+    * arithmetic are exactly PageRank's.
+    */
+  private def rank(edges: DataFrame, srcCol: String, dstCol: String,
+                   seeds: Option[DataFrame], iters: Int, dampingPpm: Long): DataFrame = {
     require(iters >= 1 && iters <= 100, "1 <= iters <= 100")
     require(dampingPpm >= 0L && dampingPpm <= 1000000L, "dampingPpm in [0, 1e6]")
     val basePpm = 1000000L - dampingPpm
-    // edge list checkpointed FIRST — see [[pageRank]]: without it the
-    // construction behind `edges` re-runs once per derived checkpoint
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val seedSet = seeds.filter(col(seedCol).isNotNull)
-      .select(col(seedCol).as("node")).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(seedSet.withColumn("_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_seed"), lit(0L)).as("is_seed"))
-      .localCheckpoint(true)
-    val eDeg = e.join(deg, Seq("src")).localCheckpoint(true)
-    var r = nodes.select(col("node"),
-      (col("is_seed") * 1000000L).as("rank_ppm")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val contrib = r.join(eDeg, r("node") === eDeg("src"))
-        .select(col("dst").as("node"),
-          expr("rank_ppm div out_deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_ppm"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (col("is_seed") * basePpm +
-            expr(s"(coalesce(in_ppm, 0L) * ${dampingPpm}L) div 1000000L"))
-            .as("rank_ppm"))
-        .localCheckpoint(true)
-      Checkpoints.free(r)
-      r = next
+    Checkpoints.iterate { it =>
+      val e = edgeList(it, edges, srcCol, dstCol)
+      val (nodes, seed) = seeds match {
+        case None => (it.share(nodesOf(e)), lit(1L))
+        case Some(s) =>
+          (it.share(nodesOf(e).join(s.withColumn("_seed", lit(1L)), Seq("node"), "left")
+            .select(col("node"), coalesce(col("_seed"), lit(0L)).as("is_seed"))),
+            col("is_seed"))
+      }
+      val eDeg = it.share(e.join(e.groupBy("src").agg(count(lit(1)).as("out_deg")), Seq("src")))
+      it.rounds(nodes.select(col("node"), (seed * 1000000L).as("rank_ppm")), iters) { r =>
+        val contrib = r.join(eDeg, r("node") === eDeg("src"))
+          .select(col("dst").as("node"),
+            expr("rank_ppm div out_deg").as("c"))
+          .groupBy("node").agg(sum(col("c")).as("in_ppm"))
+        nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"),
+            (seed * basePpm +
+              expr(s"(coalesce(in_ppm, 0L) * ${dampingPpm}L) div 1000000L"))
+              .as("rank_ppm"))
+      }
     }
-    Checkpoints.free(e)
-    Checkpoints.free(nodes)
-    Checkpoints.free(eDeg)
-    r
   }
+
+  /** `edges` as the directed edge list (src, dst), null endpoints
+    * dropped and duplicates collapsed (unweighted), shared by the loop
+    * `it`: otherwise the construction behind `edges` — a co-occurrence
+    * pair join in every registry caller — re-runs once per frame derived
+    * from it (~2x; the r13 PlanTime probe: q_pagerank construction 4-7.5 s).
+    */
+  private def edgeList(it: Checkpoints.Loop, edges: DataFrame,
+                       srcCol: String, dstCol: String): DataFrame =
+    it.share(edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
+      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+
+  /** Every node of the edge list `e`, once. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
 
   /** k-core decomposition membership: iteratively peel nodes of degree
     * < `k` (and their edges) until a fixed point — the standard
     * densest-region extractor (2-core strips pendant tails before
     * community detection; higher k isolates the cohesive cores that
     * survive support thresholds). Each round is one degree agg + a
-    * double semi-join on the shrinking edge frame, eagerly
-    * checkpointed so lineage stays flat; rounds are bounded by the
-    * peel DEPTH (the longest pendant chain), not by |V| — single
+    * double semi-join on the shrinking edge frame; rounds are bounded by
+    * the peel DEPTH (the longest pendant chain), not by |V| — single
     * digits on co-occurrence graphs. Convergence is exact (edge count
-    * fixed point), superseded round frames are freed as they die.
-    * Input: undirected unique pairs (aCol, bCol). Output:
+    * fixed point). Input: undirected unique pairs (aCol, bCol). Output:
     * (node, core_deg) for k-core members, core_deg = degree inside
     * the core.
     */
   def kCore(edges: DataFrame, aCol: String = "a", bCol: String = "b",
             k: Int = 2, maxIter: Int = 50): DataFrame = {
     require(k >= 1, "k must be positive")
-    val und = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // edge-count fixed point rides each round's checkpoint action as an
-    // observe() metric — no separate count() job per round (the
-    // nearDupClusters convergence discipline, r11)
-    val obs0 = org.apache.spark.sql.Observation()
     // both orientations via ONE explode (the nearDupClusters lesson): a
     // self-unionAll would plan and post-exchange re-run the caller's
     // (typically co-occurrence) pair generation twice
-    var cur = und
+    val first = Observation()
+    val und = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .filter(col("src") =!= col("dst"))
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
       .distinct()
-      .observe(obs0, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    var n = obs0.get("n").asInstanceOf[Long]
-    var converged = false
-    var iter = 0
-    try {
-      while (!converged && iter < maxIter) {
+      .observe(first, count(lit(1)).as("n"))
+    // the edge count of the current core: the input's rides its own
+    // materialization, each round's the round's
+    var n = -1L
+    Checkpoints.iterate { it =>
+      it.until(und, maxIter, "kCore") { (cur, obs) =>
         val keep = cur.groupBy("src").agg(count(lit(1)).as("_d"))
           .filter(col("_d") >= k).select("src")
-        val obs = org.apache.spark.sql.Observation()
-        val next = cur
-          .join(keep, Seq("src"), "left_semi")
+        cur.join(keep, Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
           .observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        val prev = cur
-        cur = next
-        Checkpoints.free(prev)
-        val m = obs.get("n").asInstanceOf[Long]
-        converged = m == n
-        n = m
-        iter += 1
-      }
-      require(converged, s"kCore did not converge in $maxIter rounds")
-    } catch {
-      case t: Throwable =>
-        Checkpoints.free(cur)
-        throw t
+      } { m =>
+        val before = if (n < 0) first.get("n").asInstanceOf[Long] else n
+        n = m("n").asInstanceOf[Long]
+        n == before
+      }.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
     }
-    cur.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** HITS hubs & authorities (Kleinberg's link-analysis pair) over a
@@ -554,8 +494,8 @@ object Graph {
     * get genuinely different rankings; on a symmetric digraph they
     * coincide — feed it real direction.
     *
-    * Integer ppm arithmetic throughout (the [[pageRank]] discipline):
-    * each half-step is a sum-push along edges then MAX-normalization
+    * Integer ppm arithmetic throughout (as [[pageRank]]): each
+    * half-step is a sum-push along edges then MAX-normalization
     * `raw * 1e6 div max(raw)` — exact BIGINT, engine-bit-identical.
     * The textbook's L2 norm is irrelevant to RANKING semantics and
     * would break exactness. Overflow: raw ≤ deg·1e6 and raw·1e6 must
@@ -563,41 +503,32 @@ object Graph {
     * per-key-capped edge frame (document, don't assert).
     *
     * Output: (node, hub_ppm, auth_ppm); 0 on the side a node never
-    * scores (a pure sink has no hub mass). Same materialization
-    * discipline as [[pageRank]]: eager checkpoints per round,
-    * superseded frames freed.
+    * scores (a pure sink has no hub mass). A round's state is its hub
+    * scores; its authority scores are materialized beside them.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 50, "1 <= iters <= 50")
-    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .localCheckpoint(true)
-    var h = e.select(col("src").as("node")).distinct()
-      .withColumn("h_ppm", lit(1000000L)).localCheckpoint(true)
-    var a: DataFrame = null
-    for (_ <- 1 to iters) {
-      val araw = e.join(h, e("src") === h("node"))
-        .groupBy(e("dst").as("node")).agg(sum(col("h_ppm")).as("_raw"))
-      val anext = araw.crossJoin(araw.agg(max(col("_raw")).as("_mx")))
-        .select(col("node"), expr("_raw * 1000000L div _mx").as("a_ppm"))
-        .localCheckpoint(true)
-      if (a != null) Checkpoints.free(a)
-      a = anext
-      val hraw = e.join(a, e("dst") === a("node"))
-        .groupBy(e("src").as("node")).agg(sum(col("a_ppm")).as("_raw"))
-      val hnext = hraw.crossJoin(hraw.agg(max(col("_raw")).as("_mx")))
-        .select(col("node"), expr("_raw * 1000000L div _mx").as("h_ppm"))
-        .localCheckpoint(true)
-      Checkpoints.free(h)
-      h = hnext
+    Checkpoints.iterate { it =>
+      val e = edgeList(it, edges, srcCol, dstCol)
+      // one half-step: push `score` from the `from` end of each edge to
+      // its `to` end, then max-normalize
+      def push(s: DataFrame, from: String, to: String, score: String, out: String) = {
+        val raw = e.join(s, e(from) === s("node"))
+          .groupBy(e(to).as("node")).agg(sum(col(score)).as("_raw"))
+        raw.crossJoin(raw.agg(max(col("_raw")).as("_mx")))
+          .select(col("node"), expr("_raw * 1000000L div _mx").as(out))
+      }
+      var a = Option.empty[DataFrame]
+      val h = it.rounds(e.select(col("src").as("node")).distinct()
+          .withColumn("h_ppm", lit(1000000L)), iters) { h =>
+        val auth = it.carry(push(h, "src", "dst", "h_ppm", "a_ppm"))
+        a = Some(auth)
+        push(auth, "dst", "src", "a_ppm", "h_ppm")
+      }
+      h.join(a.get, Seq("node"), "full")
+        .select(col("node"), coalesce(col("h_ppm"), lit(0L)).as("hub_ppm"),
+          coalesce(col("a_ppm"), lit(0L)).as("auth_ppm"))
     }
-    val out = h.join(a, Seq("node"), "full")
-      .select(col("node"), coalesce(col("h_ppm"), lit(0L)).as("hub_ppm"),
-        coalesce(col("a_ppm"), lit(0L)).as("auth_ppm"))
-    // out depends only on the checkpointed h/a leaves; the |E|-row edge
-    // cache is dead weight from here (pageRank's free discipline)
-    Checkpoints.free(e)
-    out
   }
 
   /** Bounded-hop multi-source BFS: the minimum hop distance from any
@@ -610,40 +541,38 @@ object Graph {
     * dist_k(u)) — so round cost is |reached|·deg, never paths (a naive
     * path-enumerating recursion is exponential on a dense co-purchase
     * graph; the per-node min IS the algorithm). All distances are
-    * exact integers; the oracle unrolls the same rounds
-    * ([[pageRank]]'s discipline).
+    * exact integers; the oracle unrolls the same rounds.
     *
     * Output: (node, dist) for every node within `maxHops` of a source
     * (sources themselves at 0). Unreached nodes are absent.
     *
     * Scale posture: `maxHops` joins co-partitioned on the node key,
-    * each frame ≤ |V| rows, eager-checkpointed per round with
-    * superseded frames freed — the [[hits]]/[[pageRank]] loop shape.
+    * each frame ≤ |V| rows.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, sourceCol: String,
               maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1 && maxHops <= 16, "1 <= maxHops <= 16")
-    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .localCheckpoint(true)
-    var dist = sources.filter(col(sourceCol).isNotNull)
-      .select(col(sourceCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    for (_ <- 1 to maxHops) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((min(col("dist")) + 1L).as("_d2"))
-      val next = dist.join(relaxed, Seq("node"), "full")
-        .select(col("node"),
-          least(coalesce(col("dist"), lit(Long.MaxValue)),
-            coalesce(col("_d2"), lit(Long.MaxValue))).as("dist"))
-        .localCheckpoint(true)
-      Checkpoints.free(dist)
-      dist = next
+    Checkpoints.iterate { it =>
+      val e = edgeList(it, edges, srcCol, dstCol)
+      it.rounds(sources.filter(col(sourceCol).isNotNull)
+        .select(col(sourceCol).as("node")).distinct()
+        .withColumn("dist", lit(0L)), maxHops)(relax(e, Nil))
     }
-    Checkpoints.free(e)
-    dist
+  }
+
+  /** One frontier-relaxation round of the hop-distance state `dist`,
+    * keyed by `keys` and `node`, along the edge list `e`: a node's
+    * distance becomes the least of its own and 1 + its in-neighbors'.
+    */
+  private def relax(e: DataFrame, keys: Seq[String])(dist: DataFrame): DataFrame = {
+    val relaxed = dist.join(e, dist("node") === e("src"))
+      .groupBy(keys.map(col) :+ col("dst").as("node"): _*)
+      .agg((min(col("dist")) + 1L).as("_d2"))
+    dist.join(relaxed, keys :+ "node", "full")
+      .select(keys.map(col) ++ Seq(col("node"),
+        least(coalesce(col("dist"), lit(Long.MaxValue)),
+          coalesce(col("_d2"), lit(Long.MaxValue))).as("dist")): _*)
   }
 
   /** Hop-capped harmonic centrality from a landmark set — the
@@ -670,34 +599,20 @@ object Graph {
                          maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1 && maxHops <= 4, "1 <= maxHops <= 4 (lcm stays tiny)")
     val lcm = Seq(1L, 1L, 2L, 6L, 12L)(maxHops)
-    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .localCheckpoint(true)
-    var dist = landmarks.filter(col(landmarkCol).isNotNull)
-      .select(col(landmarkCol).as("lm")).distinct()
-      .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to maxHops) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .groupBy(col("lm"), col("dst").as("node"))
-        .agg((min(col("dist")) + 1L).as("_d2"))
-      val next = dist.join(relaxed, Seq("lm", "node"), "full")
-        .select(col("lm"), col("node"),
-          least(coalesce(col("dist"), lit(Long.MaxValue)),
-            coalesce(col("_d2"), lit(Long.MaxValue))).as("dist"))
-        .localCheckpoint(true)
-      Checkpoints.free(dist)
-      dist = next
+    Checkpoints.iterate { it =>
+      val e = edgeList(it, edges, srcCol, dstCol)
+      it.rounds(landmarks.filter(col(landmarkCol).isNotNull)
+        .select(col(landmarkCol).as("lm")).distinct()
+        .select(col("lm"), col("lm").as("node"), lit(0L).as("dist")), maxHops)(relax(e, Seq("lm")))
+        .filter(col("dist") >= 1L)
+        .groupBy("node")
+        .agg(count(lit(1)).as("n_reached_from"),
+          // `div`, not `/`: Spark's Divide widens longs to double — the
+          // lcm scaling exists precisely to keep this an integer sum
+          sum(expr(s"$lcm div dist")).as("_h"))
+        .select(col("node"), col("n_reached_from"),
+          round(col("_h").cast("double") / lcm.toDouble, 6).as("harmonic"))
     }
-    Checkpoints.free(e)
-    dist.filter(col("dist") >= 1L)
-      .groupBy("node")
-      .agg(count(lit(1)).as("n_reached_from"),
-        // `div`, not `/`: Spark's Divide widens longs to double — the
-        // lcm scaling exists precisely to keep this an integer sum
-        sum(expr(s"$lcm div dist")).as("_h"))
-      .select(col("node"), col("n_reached_from"),
-        round(col("_h").cast("double") / lcm.toDouble, 6).as("harmonic"))
   }
 
   /** Per-node local clustering coefficient over the co-occurrence
@@ -800,35 +715,25 @@ object Graph {
     * argmax neighbor label. Fixed synchronous rounds + exact argmax =
     * engine-reproducible (asynchronous/random-order LPA is not). Each
     * round is one (node,label) count agg + one per-node struct-min
-    * argmax — the [[pageRank]] eager-checkpoint discipline keeps
-    * lineage flat and frees superseded label frames. The oracle
-    * unrolls the same rounds (never materializing communities as
-    * paths). Output: (node, lab).
+    * argmax. The oracle unrolls the same rounds (never materializing
+    * communities as paths). Output: (node, lab).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 2): DataFrame = {
     require(rounds >= 1 && rounds <= 8, "1 <= rounds <= 8")
-    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .localCheckpoint(true)
-    var lab = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .withColumn("lab", col("node")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val nbr = lab.join(e, lab("node") === e("src"))
-        .groupBy(col("dst").as("node"), col("lab"))
-        .agg(count(lit(1)).as("_c"))
-      val picked = nbr
-        .groupBy("node")
-        .agg(min(struct((-col("_c")).as("_nc"), col("lab").as("_l"))).as("_m"))
-        .select(col("node"), col("_m").getField("_l").as("_nl"))
-      val next = lab.join(picked, Seq("node"), "left")
-        .select(col("node"), coalesce(col("_nl"), col("lab")).as("lab"))
-        .localCheckpoint(true)
-      Checkpoints.free(lab)
-      lab = next
+    Checkpoints.iterate { it =>
+      val e = edgeList(it, edges, srcCol, dstCol)
+      it.rounds(nodesOf(e).withColumn("lab", col("node")), rounds) { lab =>
+        val nbr = lab.join(e, lab("node") === e("src"))
+          .groupBy(col("dst").as("node"), col("lab"))
+          .agg(count(lit(1)).as("_c"))
+        val picked = nbr
+          .groupBy("node")
+          .agg(min(struct((-col("_c")).as("_nc"), col("lab").as("_l"))).as("_m"))
+          .select(col("node"), col("_m").getField("_l").as("_nl"))
+        lab.join(picked, Seq("node"), "left")
+          .select(col("node"), coalesce(col("_nl"), col("lab")).as("lab"))
+      }
     }
-    Checkpoints.free(e)
-    lab
   }
 }

@@ -1059,11 +1059,10 @@ object Stats {
     */
   def kendallTau(df: DataFrame, groupCol: String, xCol: Column,
                  yCol: Column): DataFrame = {
-    val base = df.filter(col(groupCol).isNotNull &&
+    val base = Checkpoints.stage(df.filter(col(groupCol).isNotNull &&
         xCol.isNotNull && yCol.isNotNull)
       .select(col(groupCol).as("_g"), metricLong(xCol).as("_x"),
-        metricLong(yCol).as("_y"))
-      .localCheckpoint()
+        metricLong(yCol).as("_y")))
     val l = base.select(col("_g"), col("_x").as("_x1"), col("_y").as("_y1"))
     val r = base.select(col("_g"), col("_x").as("_x2"), col("_y").as("_y2"))
     // every unordered pair once: join on group, keep one orientation by

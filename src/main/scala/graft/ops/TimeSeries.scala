@@ -485,14 +485,12 @@ object TimeSeries {
     * events scan.
     */
   def mannKendall(df: DataFrame, seriesCol: String, tsCol: String): DataFrame = {
-    // localCheckpoint, not cache: eagerly materializes the ≤365·|series|
-    // frame once for the three consumers below WITHOUT pinning blocks
-    // for the session lifetime (the un-freeable-cache leak class the
-    // nearDupClusters comment documents)
-    val daily = df.filter(col(seriesCol).isNotNull && col(tsCol).isNotNull)
+    // staged, not cached: materializes the ≤365·|series| frame once for
+    // the three consumers below WITHOUT pinning blocks for the session
+    // lifetime (the un-freeable-cache leak class Checkpoints documents)
+    val daily = Checkpoints.stage(df.filter(col(seriesCol).isNotNull && col(tsCol).isNotNull)
       .groupBy(col(seriesCol).as("_g"), date_trunc("day", col(tsCol)).as("day"))
-      .agg(count(lit(1)).as("_x"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("_x")))
     val a = daily.select(col("_g"), col("day").as("_d1"), col("_x").as("_x1"))
     val b = daily.select(col("_g"), col("day").as("_d2"), col("_x").as("_x2"))
     val s = a.join(b, Seq("_g")).filter(col("_d1") < col("_d2"))
@@ -530,16 +528,15 @@ object TimeSeries {
     * in a double at these magnitudes).
     *
     * Scale posture: the pairwise join runs on the (series, day)
-    * COLLAPSED frame (≤365·|series| rows, localCheckpoint'd once — the
+    * COLLAPSED frame (≤365·|series| rows, staged once — the
     * [[mannKendall]] discipline), never on events; the per-series
     * median sorts the ≤days²/2 slope array inside one agg.
     * Output: (series, n_days, n_pairs, slope_ppm).
     */
   def theilSen(df: DataFrame, seriesCol: String, tsCol: String): DataFrame = {
-    val daily = df.filter(col(seriesCol).isNotNull && col(tsCol).isNotNull)
+    val daily = Checkpoints.stage(df.filter(col(seriesCol).isNotNull && col(tsCol).isNotNull)
       .groupBy(col(seriesCol).as("_g"), date_trunc("day", col(tsCol)).as("day"))
-      .agg(count(lit(1)).as("_x"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("_x")))
     val a = daily.select(col("_g"), col("day").as("_d1"), col("_x").as("_x1"))
     val b = daily.select(col("_g"), col("day").as("_d2"), col("_x").as("_x2"))
     val slope = floor(

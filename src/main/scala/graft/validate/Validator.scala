@@ -4,7 +4,7 @@ import java.net.URI
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+import org.apache.spark.sql.functions.{col, count, input_file_name, lit, md5}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.io.{CsvSource, FsUtil, ParquetIO, PathUtil}
@@ -94,6 +94,9 @@ object Validator {
     */
   val SourceFileCol = "_source_file"
 
+  /** The quarantine's partition column: the MD5 of [[SourceFileCol]]. */
+  val SourceKeyCol = "_source_key"
+
   /** P3+P5 — cast projection + any-null row rejection
     * (`scripts/validate_data.py:135-139`). The `carry` columns ride along
     * unchanged and take no part in the null check.
@@ -107,7 +110,7 @@ object Validator {
 
   /** S1+S7+P7+P3+P5+U1 — the full streams ingest
     * (`scripts/validate_data.py:91-158`): one permissive scan over every
-    * file, split into the quarantine (JSON append, written before this
+    * file, split into the quarantine (JSON, written before this
     * returns) and the clean rows (cast, na.drop), the three stream columns.
     * `paths` elements may be comma-separated lists. The clean rows are
     * served from the scan's cached parse, which stays cached.
@@ -141,7 +144,7 @@ object Validator {
     * twice, or spelled two ways, counts once. Every file that already
     * names staged rows under `stagedPath` is dropped before parsing; the
     * rest go to `parse`, which returns their permissive parse. Its rows
-    * are stamped with [[SourceFileCol]], corrupt rows are appended to the
+    * are stamped with [[SourceFileCol]], corrupt rows are written to the
     * quarantine under `quarantinePath`, and the clean rows are appended to
     * `stagedPath` with the stamp. The staged rows are thus the ledger: one
     * write job commits a file's rows and its "staged" mark together.
@@ -186,17 +189,23 @@ object Validator {
       .collect().toSet
 
   /** Stamp every row of the permissive parse `raw` with its
-    * [[SourceFileCol]], cache it, append its corrupt rows to the
-    * quarantine under `quarantinePath`, and return the cached parse. If
-    * the quarantine write fails the parse is released here.
+    * [[SourceFileCol]], cache it, write its corrupt rows to the quarantine
+    * under `quarantinePath`, and return the cached parse. If the
+    * quarantine write fails the parse is released here.
+    *
+    * A write replaces the quarantine partitions ([[SourceKeyCol]]) of the
+    * files it quarantines, so a file parsed again (it had no clean row to
+    * mark it staged, or a run failed before its staging commit) does not
+    * quarantine its corrupt rows twice.
     *
     * The stamp is taken before the cache: over a cached relation
     * `input_file_name()` reads `""`, so it must be evaluated by the scan.
     */
   private def splitStreams(raw: DataFrame, quarantinePath: Option[String]): DataFrame = {
     val parse = raw.withColumn(SourceFileCol, input_file_name()).cache()
-    try quarantinePath.foreach(
-      ParquetIO.quarantineJson(parse.filter(col(CsvSource.CorruptCol).isNotNull), _))
+    try quarantinePath.foreach(ParquetIO.quarantineJson(
+      parse.filter(col(CsvSource.CorruptCol).isNotNull)
+        .withColumn(SourceKeyCol, md5(col(SourceFileCol))), _, SourceKeyCol))
     catch { case e: Throwable => parse.unpersist(); throw e }
     parse
   }

@@ -99,6 +99,38 @@ class PipelineSpec extends SparkSpec with KvStores {
     store.scanAll().toSet shouldBe cleanStore.scanAll().toSet
   }
 
+  private lazy val cleanRun = {
+    val cfg = fixtureConfig(tmpDir("pipe_boundary_clean"))
+    val store = newStore()
+    PipelineJob.run(spark, cfg, Some(store))
+    (kpiTables(cfg), store.scanAll().toSet)
+  }
+
+  // Each boundary is a file operation that fails under the run's output
+  // paths: (where the run fails, the operation, the path under the base,
+  // the rows the re-run stages).
+  for ((where, op, under, restaged) <- Seq(
+      ("after the quarantine write, before the staging commit", "create", "staging/streams/", 71L),
+      ("after the staging commit, before the KPIs", "open", "staging/streams/", 0L),
+      ("during a KPI write", "create", "out/trending_kpis/", 0L))) {
+    test(s"a run that failed $where, re-run, equals a clean run") {
+      val (wantKpis, wantItems) = cleanRun
+      FaultyFs.register(spark.sparkContext)
+      val base = tmpDir("pipe_boundary")
+      val cfg = fixtureConfig(s"${FaultyFs.Scheme}://$base")
+      val e = FaultyFs.during(op, s"$base/$under") {
+        intercept[Exception](PipelineJob.run(spark, cfg, Some(newStore())))
+      }
+      causeMessages(e) should include("injected fault")
+      val store = newStore()
+      PipelineJob.run(spark, cfg, Some(store)).stagedStreamRows shouldBe restaged
+      kpiTables(cfg) shouldBe wantKpis
+      store.scanAll().toSet shouldBe wantItems
+      // a file re-staged after the crash is not quarantined twice
+      spark.read.json(s"${cfg.quarantineDir.get}/corrupt_records").count() shouldBe 4
+    }
+  }
+
   test("a file IncrementalIngest staged is not staged again by the batch job") {
     val base = tmpDir("pipe_incr")
     val in = s"$base/in"

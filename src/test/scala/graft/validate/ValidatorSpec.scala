@@ -159,6 +159,18 @@ class ValidatorSpec extends SparkSpec {
     }
   }
 
+  test("a stream file with no clean row, staged twice, is quarantined once") {
+    val dir = tmpDir("noclean")
+    val f = s"$dir/bad.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
+      "user_id,track_id,listen_time\nu1,t1,not-a-time\n")
+    // no clean row marks the file staged, so each call parses it again
+    for (_ <- 1 to 2)
+      Validator.stageStreams(spark, Seq(f), s"$dir/staged", Some(s"$dir/q"))(
+        Validator.readStreams(spark, _)) shouldBe 0L
+    spark.read.json(s"$dir/q/corrupt_records").count() shouldBe 1
+  }
+
   test("processStreams: empty path list and missing-columns file both fail loudly") {
     intercept[IllegalArgumentException] {
       Validator.processStreams(spark, Seq.empty)

@@ -34,6 +34,9 @@ def dtype_class(s: pd.Series) -> str:
 def main(sf_dir, out_dir):
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     con = duckdb.connect()
+    # the oracle SQL names fixture files relative to the checkout root
+    # (SparkEntry.FixturesRelDir): resolve them against this checkout
+    con.execute(f"SET file_search_path = '{os.path.dirname(os.path.dirname(os.path.abspath(__file__)))}'")
     for name in ["region","nation","customer","supplier","part","orders",
                  "lineitem","events","documents","embeddings"]:
         p = f"{sf_dir}/{name}.parquet"
